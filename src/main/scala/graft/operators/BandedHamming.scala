@@ -89,7 +89,7 @@ import org.apache.spark.sql.functions._
   * the occupancy census counts DISTINCT values per bucket, which is
   * not additive across arriving batches — a streaming maintainer
   * derives stats from the drained (summed) census, not from partial
-  * sums (see `Streams.drainValueCensus`).
+  * sums (see `Streams.census`).
   *
   * 100 TB: the exchange carries (band index, band value, fingerprint)
   * rows — bytes per row, rows = |input|·|bands| (·C(b,2)/b under

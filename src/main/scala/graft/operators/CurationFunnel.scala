@@ -254,7 +254,7 @@ object CurationFunnel {
 
   /** q130's gate logic over an ARBITRARY arriving-docs relation — the
     * shared core of the batch query above and the streaming wrapper
-    * ([[graft.streaming.Streams.streamIncrementalCuration]]): tokenize
+    * (the `curate` maintainer of [[graft.streaming.Streams.documents]]): tokenize
     * the arriving docs from their own scan, merge their deltas into
     * the PERSISTED corpus statistics, emit per-doc gate decisions.
     * The docs relation needs (doc_id, lang, text). */

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.GraftQuery
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,6 +17,28 @@ import org.apache.spark.sql.types._
   * batch emits every window (append mode would hold windows open until
   * the watermark passes them — right for production, wrong for a
   * one-shot verification read).
+  *
+  * MAINTAINED ARTIFACTS are data, not code: each is a [[Maintainer]]
+  * (name, corpus filter, per-batch featurize, partial contract, pinned
+  * read-back schema, fold) in the list of the [[Source]] whose
+  * arrivals feed it, and ONE [[drain]] keeps any set of them fresh
+  * from one stream. The catalog serves read each source's memoized
+  * `drain(all)` ([[served]]):
+  *
+  *   documents   simhash / image / audio / wide-video censuses (q350–
+  *               q361, q366), MinHash band index (q363/q364),
+  *               count-min (q153), drift (q165), KMV (q229), PSI
+  *               (q278), CDC apply (q282), Merkle (q288), CDC chunk
+  *               census (q312), curation (q145), image features (q131)
+  *   embeddings  Gram moments (q298), hard negatives (q325),
+  *               compaction census (q344), drift census (q357)
+  *   events      decayed counts (q188), OLS daily census (q265)
+  *   lineitem    MV partials (q233), zone maps (q301)
+  *   orders      RFM metrics (q299)
+  *
+  * A single drain is `drain(Seq(m))` — the same code path. Adding a
+  * maintainer is one [[Maintainer]] value and one entry in its
+  * source's list.
   */
 object Streams {
 
@@ -182,14 +204,462 @@ object Streams {
     streamDir.toString
   }
 
-  private def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val streamDir = stageAsStreamDir("graft_stream", sfDir, "events.parquet")
-    // footer-only probe (no data read) for the generation's ts type
-    val fileSchema = spark.read.parquet(streamDir).schema
-    graft.sources.Tables.normalizeEventsTs(
-      spark.readStream.schema(fileSchema).parquet(streamDir))
+  // ---- streaming maintainers as data ----
+
+  /** How a maintainer's per-trigger partial lands in its log. */
+  private[graft] sealed trait Partial
+
+  /** Appended to the log. */
+  private[graft] case object Append extends Partial
+
+  /** Overwrites the log's `batch=<batchId>` directory — replay-
+    * idempotent: a retried trigger rewrites, never double-counts. */
+  private[graft] case object ByBatch extends Partial
+
+  /** One artifact a stream keeps fresh. Per trigger, the maintainer's
+    * `corpus` rows of the arriving batch — when any arrived — are
+    * `featurize`d into ONE partial written under the `partial`
+    * contract (a corpus filter is a maintainer concern, never a stream
+    * concern). The serve reads the log back under the pinned `schema`
+    * (None: the schema its files carry) and `fold`s it. The partials
+    * are monoid slices, so the drained artifact equals the batch-built
+    * one under any arrival slicing — every serving query keeps its
+    * batch oracle.
+    *
+    * `counts` names the columns of a companion count log derived from
+    * each WRITTEN partial (read back, never re-featurized — the band
+    * index signs each document once per trigger) and summed at the
+    * serve, so rows and counts can never disagree. `scheme` marks a
+    * value census: its guard statistics are computed once over the
+    * drained census (bucket occupancy is a DISTINCT-value count, not
+    * additive across triggers, so never from partials). */
+  private[graft] final case class Maintainer(
+      name: String,
+      corpus: Column,
+      featurize: DataFrame => DataFrame,
+      partial: Partial,
+      schema: Option[String],
+      fold: DataFrame => DataFrame,
+      counts: Seq[String] = Nil,
+      scheme: Option[graft.operators.BandedHamming.BandScheme] = None) {
+    require(counts.isEmpty || (partial == ByBatch && schema.nonEmpty),
+      s"$name: a count log reads back a pinned batchId-keyed partial")
   }
+
+  /** A file-stream source: the testdata file staged as its arrival
+    * directory, its pinned stream schema (None: probed from the staged
+    * footers), the maintainers its `drain(all)` keeps fresh — built
+    * per (session, corpus), since some featurizes close over
+    * corpus-derived state — and a read normalization. */
+  private[graft] final case class Source(
+      name: String,
+      file: String,
+      schema: Option[String],
+      all: (SparkSession, String) => Seq[Maintainer],
+      normalize: DataFrame => DataFrame = identity)
+
+  /** `source` as a file stream. `srcDir` overrides the staged
+    * directory — specs stage a MULTI-FILE copy and cap
+    * `maxFilesPerTrigger` to force several micro-batches. */
+  private def readStream(spark: SparkSession, source: Source,
+      sfDir: String, srcDir: Option[String],
+      maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val dir = srcDir.getOrElse(
+      stageAsStreamDir("graft_stream_" + source.name, sfDir, source.file))
+    val reader = spark.readStream
+    source.schema match {
+      case Some(ddl) => reader.schema(ddl)
+      case None =>
+        // footer-only probe (no data read); a nanos event ts reads as
+        // the long the events normalization converts
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        reader.schema(spark.read.parquet(dir).schema)
+    }
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    source.normalize(reader.parquet(dir))
+  }
+
+  /** The events table as a file stream, ts normalized to µs
+    * TimestampType whichever physical type the generation stored. */
+  private def readEventsStream(spark: SparkSession, sfDir: String,
+      srcDir: Option[String] = None,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    readStream(spark, events, sfDir, srcDir, maxFilesPerTrigger)
+
+  /** A drained maintainer: its folded log, checkpointed — the barrier
+    * that decouples it from the scratch files any later drain wipes and
+    * rewrites — plus the band index's summed bucket counts and a value
+    * census's guard statistics. */
+  private[graft] final case class Served(rows: DataFrame,
+      counts: Option[DataFrame],
+      stats: Option[graft.operators.BandedHamming.GuardStats]) {
+    def stated: graft.operators.BandedHamming.StatedIndex =
+      graft.operators.BandedHamming.StatedIndex(rows, stats.get)
+    def bands: graft.operators.Dedup.BandIndex =
+      graft.operators.Dedup.BandIndex(rows, counts.get)
+    def release(): Unit = (rows +: counts.toSeq)
+      .foreach(org.apache.spark.sql.graftshim.Checkpoints.release)
+  }
+
+  private def logDir(m: Maintainer, key: String): String =
+    graft.operators.Formats.scratchDir("graft_stream_" + m.name, key)
+
+  /** The log read back and folded, and the count log summed. Lazy:
+    * parquet file listings resolve at read construction, so re-read
+    * after anything rewrites the log. */
+  private def readLog(spark: SparkSession, m: Maintainer,
+      dir: String): (DataFrame, Option[DataFrame]) = {
+    val reader = spark.read
+    m.schema.foreach(s => reader.schema(s))
+    val counts = if (m.counts.isEmpty) None else Some(
+      spark.read.schema(StructType(StructType.fromDDL(m.schema.get)
+          .filter(f => m.counts.contains(f.name))).add("n_partial", LongType))
+        .parquet(dir + "_counts")
+        .groupBy(m.counts.map(col): _*).agg(sum("n_partial").as("n_corpus")))
+    (m.fold(reader.parquet(dir)), counts)
+  }
+
+  /** THE streaming maintenance path: ONE stream over `source` keeps
+    * every maintainer in `maintainers` fresh. When several maintainers
+    * read a trigger, its batch is persisted and each featurizes from
+    * that cached batch — the ingest bytes are read once (at 100 TB, N
+    * maintainers must not mean N reads of the ingest, nor N stream
+    * setups); a lone maintainer runs exactly its own jobs. Each
+    * maintainer keeps its own log in a per-(maintainer, corpus)
+    * scratch dir, wiped up front so a rerun never reads a previous
+    * run's partials; every served relation is checkpointed before it
+    * returns, so a later drain rewriting a dir can never disturb one
+    * already served. `drain(all)` and `drain(Seq(m))` are one code
+    * path — StreamsSpec pins their equivalence for every maintainer of
+    * every source, and that each `drain(all)` starts ONE streaming
+    * query.
+    *
+    * `onPrefix` is the PREFIX-SERVEABILITY observation hook: when
+    * present, it fires after each maintainer's write in every trigger
+    * its corpus rows arrived in, with (the maintainer's name, those
+    * rows, its log folded over every partial written SO FAR) — the
+    * relation a mid-stream probe would serve from. StreamsSpec drives
+    * it to assert that probing a partially-maintained census at EVERY
+    * prefix equals the batch probe over the prefix corpus (drained ≡
+    * batch at every trigger boundary, not just at the end). Production
+    * drains pass None and pay nothing. */
+  private[graft] def drain(spark: SparkSession, source: Source,
+      maintainers: Seq[Maintainer], sfDir: String,
+      srcDir: Option[String] = None,
+      maxFilesPerTrigger: Option[Int] = None,
+      onPrefix: Option[(String, DataFrame, DataFrame) => Unit] = None)
+      : Map[String, Served] = {
+    val dirs = maintainers.map(m =>
+      m.name -> logDir(m, srcDir.getOrElse(sfDir))).toMap
+    // a log no trigger wrote must read back as an EMPTY directory, not
+    // a missing path (a pinned schema makes the empty read valid)
+    maintainers.flatMap(m =>
+      dirs(m.name) +: m.counts.take(1).map(_ => dirs(m.name) + "_counts"))
+      .foreach { d =>
+        graft.operators.Formats.wipe(d)
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+      }
+    val shared = maintainers.size > 1
+    withStreamShufflePartitions(spark) {
+      val q = readStream(spark, source, sfDir, srcDir, maxFilesPerTrigger)
+        .writeStream
+        .foreachBatch { (batch: Dataset[Row], bid: Long) =>
+          val b = if (shared) batch.toDF().persist() else batch.toDF()
+          try {
+            // one emptiness check per distinct corpus filter
+            val arrived = maintainers.map(_.corpus).distinct
+              .map(c => c -> !b.where(c).isEmpty).toMap
+            maintainers.filter(m => arrived(m.corpus)).foreach { m =>
+              val in = b.where(m.corpus)
+              val dir = dirs(m.name)
+              val part = if (m.partial == ByBatch) s"$dir/batch=$bid" else dir
+              m.featurize(in).write
+                .mode(if (m.partial == ByBatch) "overwrite" else "append")
+                .parquet(part)
+              if (m.counts.nonEmpty)
+                spark.read.schema(m.schema.get).parquet(part)
+                  .groupBy(m.counts.map(col): _*)
+                  .agg(count(lit(1)).as("n_partial"))
+                  .write.mode("overwrite").parquet(s"${dir}_counts/batch=$bid")
+              onPrefix.foreach(f => f(m.name, in, readLog(spark, m, dir)._1))
+            }
+          } finally if (shared) b.unpersist()
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    maintainers.map { m =>
+      val (rows, counts) = readLog(spark, m, dirs(m.name))
+      val ck = rows.localCheckpoint()
+      m.name -> Served(ck, counts.map(_.localCheckpoint()),
+        m.scheme.map(_.stats(ck)))
+    }.toMap
+  }
+
+  /** Each source's `drain(all)`, once per (session, corpus, staging
+    * dir, trigger config) — what the catalog serves read. Released on
+    * eviction. */
+  private val drained =
+    new graft.spark.SessionMemo[(String, String, Option[String], Option[Int]),
+      Map[String, Served]]("streams.drained")(_.values.foreach(_.release()))
+
+  private def served(spark: SparkSession, source: Source,
+      sfDir: String, srcDir: Option[String] = None,
+      maxFilesPerTrigger: Option[Int] = None): Map[String, Served] =
+    drained.getOrElseUpdate(
+      spark, (source.name, sfDir, srcDir, maxFilesPerTrigger))(
+      drain(spark, source, source.all(spark, sfDir), sfDir, srcDir,
+        maxFilesPerTrigger))
+
+  // ---- the maintainer table: one entry per maintained artifact ----
+
+  private[graft] val documents: Source = Source("documents",
+    "documents.parquet",
+    Some("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"),
+    documentMaintainers)
+
+  private[graft] val embeddings: Source = Source("embeddings",
+    "embeddings.parquet",
+    Some("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"),
+    embeddingMaintainers)
+
+  private[graft] val events: Source = Source("events", "events.parquet",
+    None, (_, _) => eventMaintainers, graft.sources.Tables.normalizeEventsTs)
+
+  private[graft] val lineitem: Source = Source("lineitem",
+    "lineitem.parquet", None, (_, _) => lineitemMaintainers)
+
+  private[graft] val orders: Source = Source("orders", "orders.parquet",
+    None, (_, _) => Seq(rfmMetrics))
+
+  private[graft] def sources: Seq[Source] =
+    Seq(documents, embeddings, events, lineitem, orders)
+
+  /** The incremental-dedup FIXTURES' batch/corpus split (q345/q349/
+    * q353/q354 and their streaming forms): doc_id % 5 == 4 is the
+    * arriving batch, everything else the maintained corpus. A fixture
+    * convention each census tier passes as its corpus filter — the
+    * census constructor itself is fixture-agnostic. */
+  private def fixtureCorpusFilter: Column =
+    pmod(col("doc_id"), lit(5)) =!= 4
+
+  /** THE value-census constructor behind every corpus-index tier
+    * (simhash q350, image q355, audio q358, wide video q360):
+    * `featurize` turns a batch's documents into fingerprint rows
+    * (synthesis + decode stay inside the partition — payloads never
+    * cross an exchange or land in the log); each trigger's census
+    * partial overwrites its batchId-keyed directory and the fold
+    * re-sums. Counts add — every value census is a monoid — so the
+    * drained relation is the batch-built corpus index VERBATIM under
+    * any arrival slicing, proven per tier by the corpus-census oracle.
+    * `valueSchema` pins the read-back types so each tier's output
+    * schema matches its oracle exactly; `scheme` is the banding its
+    * probes use. */
+  private def census(name: String, corpus: Column,
+      groupCols: Seq[String], valueSchema: String,
+      scheme: graft.operators.BandedHamming.BandScheme,
+      featurize: DataFrame => DataFrame): Maintainer =
+    Maintainer(name, corpus,
+      b => featurize(b).groupBy(groupCols.map(col): _*)
+        .agg(count(lit(1)).as("n_partial")),
+      ByBatch, Some(s"$valueSchema, n_partial BIGINT"),
+      _.groupBy(groupCols.map(col): _*).agg(sum("n_partial").as("n_docs")),
+      scheme = Some(scheme))
+
+  private[graft] val simhashCensus: Maintainer = census("simhash_census",
+    fixtureCorpusFilter, Seq("simhash"), "simhash BIGINT",
+    graft.operators.Dedup.simhashScheme,
+    _.select(org.apache.spark.sql.graftshim.SimHashMd5(
+      graft.functions.TextFunctions.distinctTokens(
+        lower(col("text")))).as("simhash")))
+
+  /** The REAL-CODEC tier: each trigger synthesizes and decodes only ITS
+    * OWN PNG payloads (executor-global decoder pool — constructions
+    * bounded by peak task concurrency, not trigger count). The
+    * multimodal corpus is never re-decoded, which at 100 TB is the
+    * difference between a census refresh and a full decode pass over
+    * the archive. */
+  private[graft] val imageCensus: Maintainer = census("image_census",
+    fixtureCorpusFilter, Seq("ahash_hi", "ahash_lo"),
+    "ahash_hi BIGINT, ahash_lo BIGINT",
+    graft.operators.Multimodal.imageScheme,
+    graft.operators.Multimodal.imageAHashesFromDocs)
+
+  /** WAV synthesis + real-codec decode per partition, one decoder per
+    * task disposed on completion. */
+  private[graft] val audioCensus: Maintainer = census("audio_census",
+    fixtureCorpusFilter, Seq("fingerprint"), "fingerprint BIGINT",
+    graft.operators.Multimodal.audioScheme,
+    graft.operators.Multimodal.audioFingerprintsFromDocs)
+
+  /** The census key carries the clip width (n_sampled pinned INTEGER so
+    * the drained schema matches the oracle's). */
+  private[graft] val videoWideCensus: Maintainer = census("videow_census",
+    fixtureCorpusFilter, graft.operators.Multimodal.videoWideCensusCols,
+    graft.operators.Multimodal.videoWideCensusCols.map {
+      case "n_sampled" => "n_sampled INT"
+      case c => s"$c BIGINT"
+    }.mkString(", "),
+    graft.operators.Multimodal.videoWideScheme,
+    graft.operators.Multimodal.videoWideFromDocs)
+
+  /** The MinHash band index (q94's probe target) — per-doc rows, not a
+    * count census: each trigger signs only ITS OWN corpus documents
+    * (the fused MinHashBandHashes expression — shingles/digests never
+    * materialize) into one batchId-keyed partial of (doc_id, band_id,
+    * band_hash) rows, so the drained UNION is the batch-built band
+    * index VERBATIM — each document contributes its band rows exactly
+    * once. The per-bucket census rides as the companion count log
+    * (counts ADD), so the probe's flood guard reads maintained counts
+    * instead of windowing the corpus index — the SAME stated shape as
+    * the batch-built index. */
+  private val minhashBands: Maintainer = Maintainer("minhash_bands",
+    pmod(col("doc_id"), lit(2)) === 0, // q94's corpus split
+    graft.operators.Dedup.docBands(_), ByBatch,
+    Some("doc_id BIGINT, band_id INT, band_hash STRING"),
+    _.select("doc_id", "band_id", "band_hash"),
+    counts = Seq("band_id", "band_hash"))
+
+  /** Every document-fed artifact: the five dedup corpus indexes and the
+    * monoid partial logs / featurized sinks of q153, q165, q229, q278,
+    * q282, q288, q312, q145 and q131. */
+  private def documentMaintainers(spark: SparkSession,
+      sfDir: String): Seq[Maintainer] = Seq(
+    simhashCensus, imageCensus, audioCensus, videoWideCensus, minhashBands,
+    Maintainer("cms", lit(true), b => graft.operators.Selection
+      .cmPartialSketch(graft.operators.Selection.docTokens(b)),
+      Append, None, identity),
+    Maintainer("drift", lit(true), graft.operators.Selection.driftPartial,
+      Append, None, identity),
+    Maintainer("kmv", lit(true), graft.operators.KmvSketch.partialSketch,
+      Append, Some("source STRING, h BIGINT"), identity),
+    Maintainer("psi", lit(true), graft.operators.TrendStats.lengthCensus,
+      Append, None, identity),
+    Maintainer("cdc", lit(true), b => graft.operators.ModelQueries.cdcLatest(
+      graft.operators.ModelQueries.cdcLog(b)), Append, None, identity),
+    Maintainer("merkle", lit(true), b => graft.operators.ModelQueries
+      .merkleLeaf(b.select(col("doc_id"), md5(col("text")).as("fp")),
+        "n_a", "f_a"), Append, None, identity),
+    Maintainer("cdc_census", lit(true), b => graft.operators.CdcChunking
+      .cdcChunks(b).groupBy("chunk_md5")
+      .agg(count(lit(1)).as("n_occurrences"),
+        countDistinct(col("doc_id")).as("n_docs"),
+        min(col("doc_id")).as("min_doc"),
+        max(col("chunk_len")).as("chunk_len")), Append, None, identity),
+    // q130's gate run per arriving batch against the persisted corpus
+    // statistics — built ONCE across all triggers (StreamsSpec pins the
+    // build counter); the decisions land in a log a downstream trainer
+    // reads mid-stream
+    Maintainer("curate", pmod(col("doc_id"), lit(5)) === 4,
+      graft.operators.CurationFunnel.curateBatch(spark, sfDir, _),
+      ByBatch, None,
+      _.withColumn("batch_id", col("batch").cast("long")).drop("batch")),
+    // q101's decode per trigger through the EXECUTOR-GLOBAL decoder
+    // pool: constructions bounded by peak task concurrency, not by
+    // trigger count (MultimodalSpec pins the counter); payloads are born
+    // and consumed inside the partition, never crossing an exchange
+    Maintainer("image_features", lit(true), b =>
+      graft.operators.Multimodal.decodeImagesPooled(
+        b.select(col("doc_id")).as[Long](Encoders.scalaLong)
+          .mapPartitions(ids => ids.map(id => graft.operators.Multimodal
+            .ImageRow(id, graft.operators.Multimodal.synthPng(id))))(
+            Encoders.product[graft.operators.Multimodal.ImageRow])).toDF(),
+      Append, None, identity))
+
+  /** Every vector-fed artifact: Gram moment partials (q298), per-anchor
+    * hard-negative argmax partials (q325), the compaction segment
+    * census over the delta split (q344) and the centroid drift census
+    * (q357). Corpus-derived state (anchors, the two bounded centroid
+    * literals) is built once per drain, on first use. */
+  private def embeddingMaintainers(spark: SparkSession,
+      sfDir: String): Seq[Maintainer] = {
+    import graft.operators.{IvfAnn, Similarity}
+    import org.apache.spark.sql.graftshim.TopKByScore
+    lazy val emb = graft.sources.Tables.embeddings(spark, sfDir)
+    lazy val anchors = emb
+      .where(pmod(col("vec_id"),
+        lit(graft.operators.HardNegatives.anchorStride)) === 0)
+      .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
+        col("label").as("a_label"))
+    lazy val pc = IvfAnn.collectCents(
+      IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride))
+    lazy val rc = IvfAnn.collectCents(IvfAnn.refitSample(emb))
+    Seq(
+      Maintainer("pca_gram", lit(true), graft.operators.Pca.gramPartial,
+        Append, None, identity),
+      Maintainer("hardneg", lit(true), b => b
+        .join(broadcast(anchors), col("label") =!= col("a_label"))
+        .select(col("a_id"), col("a_label"), col("vec_id").as("neg_id"),
+          Similarity.cosine(col("a_emb"), col("embedding")).as("cos"))
+        .groupBy("a_id", "a_label")
+        .agg(TopKByScore(col("cos"), col("neg_id"), 1).as("t"))
+        .select(col("a_id"), col("a_label"),
+          element_at(col("t"), 1).getField("id").as("neg_id"),
+          element_at(col("t"), 1).getField("score").as("cos")),
+        Append, Some("a_id BIGINT, a_label INT, neg_id BIGINT, cos DOUBLE"),
+        identity),
+      Maintainer("compact_census", pmod(col("vec_id"), lit(5)) === 4,
+        _.withColumn("seg_id", graft.operators.Compaction.segIdExpr)
+          .groupBy("seg_id").agg(count(lit(1)).as("n_partial")),
+        ByBatch, None,
+        _.groupBy("seg_id").agg(sum("n_partial").as("n_rows"))),
+      Maintainer("refresh_census", lit(true),
+        IvfAnn.driftCensusPartial(_, pc, rc), ByBatch,
+        Some("cell_old BIGINT, n_rows BIGINT, n_moved BIGINT"),
+        _.groupBy("cell_old")
+          .agg(sum("n_rows").as("n_rows"), sum("n_moved").as("n_moved"))))
+  }
+
+  /** q303's serve over arriving query vectors (every 97th vector), at
+    * the fixed probe width or — `planned` — the width the q327 planner
+    * picks once at service start. Not part of `drain(all)`: its log is
+    * the query RESULT, so it is re-drained per call, never memoized. */
+  private def servingMaintainer(spark: SparkSession, sfDir: String,
+      planned: Boolean): Maintainer = {
+    import graft.operators.{IvfAnn, IvfPq}
+    lazy val emb = graft.sources.Tables.embeddings(spark, sfDir)
+    lazy val centroids = IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride)
+    lazy val fullPath = IvfPq.codesSegment(spark, sfDir, "full",
+      IvfAnn.assign(emb, centroids))
+    lazy val probes =
+      if (planned) IvfPq.nProbeForRecall(spark, sfDir, IvfPq.plannedTargetPct)
+      else IvfPq.nProbe
+    Maintainer(if (planned) "planned_serve" else "serve",
+      pmod(col("vec_id"), lit(IvfPq.batchQueryMod)) === 0,
+      b => IvfPq.batchServe(spark, Seq(fullPath), centroids,
+        b.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
+        emb, probes = probes),
+      ByBatch, None, _.select("query_id", "rank", "vec_id", "exact_dist"))
+  }
+
+  /** The event-fed artifacts: the daily decay census (q188) and the
+    * OLS daily census (q265, summed — its non-additive moment math
+    * runs only at serve time). */
+  private def eventMaintainers: Seq[Maintainer] = Seq(
+    Maintainer("decay", lit(true),
+      _.groupBy(col("event_type"), to_date(col("ts")).as("day"))
+        .agg(count(lit(1)).as("n")),
+      Append, Some("event_type STRING, day DATE, n BIGINT"), identity),
+    Maintainer("ols", lit(true), graft.operators.TrendStats.dailyCensus,
+      Append, None, _.groupBy("event_type", "d").agg(sum("n").as("n"))))
+
+  /** The fact-fed artifacts: MV grain partials (q233) and zone-map
+    * manifests (q301, folded by min / max / sum). */
+  private def lineitemMaintainers: Seq[Maintainer] = Seq(
+    Maintainer("mv", lit(true), graft.plans.MvRewrite.mvPartial,
+      Append, None, identity),
+    Maintainer("zones", lit(true), graft.operators.ZOrder.zoneMaps,
+      Append, None, _.groupBy("layout", "bucket")
+        .agg(min("zmin").as("zmin"), max("zmax").as("zmax"),
+          sum("n").cast("long").as("n"))))
+
+  /** Per-customer RFM metrics (q299), folded by (max, sum, sum). */
+  private val rfmMetrics: Maintainer = Maintainer("rfm", lit(true),
+    graft.operators.Behavior.rfmMetrics, Append, None,
+    _.groupBy("o_custkey")
+      .agg(max("last_d").as("last_d"), sum("f").cast("long").as("f"),
+        sum("m").cast("long").as("m")))
 
   /** Stream-static join: the event stream enriched against a static
     * dimension (customer) — the dim is effectively broadcast to every
@@ -299,75 +769,11 @@ object Streams {
     sessionCounts(s, d)
   }
 
-  /** Documents table as a file stream (same symlink staging as the
-    * events stream). `srcDir` overrides the staged directory — the
-    * spec stages a MULTI-FILE copy to force multiple micro-batches. */
-  private[graft] def readDocsStream(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val dir = srcDir.getOrElse(
-      stageAsStreamDir("graft_stream_docs", sfDir, "documents.parquet"))
-    val reader = spark.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(dir)
-  }
-
-  /** Streaming multimodal featurize: the q101 decode pipeline run as a
-    * micro-batch stream — foreachBatch synthesizes the PNG payloads and
-    * decodes them through the EXECUTOR-GLOBAL decoder pool
-    * ([[graft.operators.Multimodal.decodeImagesPooled]]), appending
-    * fixed-width features to a parquet sink. foreachBatch is the right
-    * streaming shape for a featurize stage: the batch is a plain
-    * DataFrame, so the exact batch code (same typed mapPartitions, same
-    * decoder discipline) serves both modes, and the sink is a real
-    * table a trainer can read mid-stream. Decoder constructions are
-    * bounded by peak task concurrency for the session lifetime — NOT
-    * by trigger count (MultimodalSpec drives 3 micro-batches and
-    * pins the counter); payloads are born and consumed inside the
-    * partition, so no image bytes ever cross an exchange or land in
-    * the sink.
-    *
-    * Oracle: q101's analytic pixel recompute — the streaming execution
-    * must produce byte-identical features to the batch path. */
-  def streamImageFeatures(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    // deterministic per-(source, process) sink dir, wiped up front:
-    // the sink appends WITHIN one run (micro-batches), but a rerun
-    // must not read the previous run's batches — and a fresh
-    // createTempDirectory per invocation would leak one feature-table
-    // copy per bench/verify execution (the dir is also registered for
-    // deletion at JVM exit via Formats.scratchDir)
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_imgfeat", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.select(col("doc_id"))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val imgs = batch.select(col("doc_id")).as[Long]
-            .mapPartitions(ids => ids.map(id =>
-              graft.operators.Multimodal.ImageRow(id,
-                graft.operators.Multimodal.synthPng(id))))(
-              org.apache.spark.sql.Encoders.product[graft.operators.Multimodal.ImageRow])
-          graft.operators.Multimodal.decodeImagesPooled(imgs)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(outDir).orderBy("doc_id")
-  }
-
   /** Streaming featurize, oracle = q101's analytic recompute. */
   val qStreamImageDecode: GraftQuery = GraftQuery(
     "q131_stream_image_decode",
     graft.operators.Multimodal.imageDecodeOracleSql) { (s, d) =>
-    streamMultiIndexes(s, d).imageFeatures.orderBy("doc_id")
+    served(s, documents, d)("image_features").rows.orderBy("doc_id")
   }
 
   /** Sessionization via the ENGINE's session_window (dynamic-gap
@@ -434,74 +840,18 @@ object Streams {
     sessionWindows(s, d)
   }
 
-  /** STREAMING incremental curation: q130's gate logic run inside
-    * foreachBatch against the persisted corpus statistics — the
-    * round-6 verdict's missing piece between batch-incremental (q130)
-    * and a live ingest pipeline. Each micro-batch is "an arriving
-    * batch" in q130's sense: its docs are tokenized from the
-    * micro-batch itself, every corpus-wide quantity comes from the
-    * per-(session, corpus) SessionMemo indexes — built ONCE across
-    * all micro-batches (StreamsSpec pins the build counter, the q131
-    * decoder-pooling discipline applied to index state) — and the
-    * decisions land in a parquet sink a downstream trainer can read
-    * mid-stream.
-    *
-    * With the whole batch in one trigger (the staged single-file
-    * default) the streamed decisions are BYTE-IDENTICAL to q130's —
-    * q145's oracle is q130's SQL verbatim. Under maxFilesPerTrigger
-    * the stream becomes several smaller arriving batches; each batch's
-    * decisions then equal curateBatch run on exactly that slice
-    * (StreamsSpec), the honest semantics of batch-at-a-time arrival
-    * (batch-internal effects — the exact gate's batch min — are per
-    * arrival, as in q130 itself). */
-  def streamIncrementalCuration(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_curate", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .where(pmod(col("doc_id"), lit(5)) === 4)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          graft.operators.CurationFunnel.curateBatch(spark, sfDir, batch)
-            .withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(outDir)
-  }
-
   /** Streamed incremental curation, oracle = q130's full-recompute
     * equivalence SQL (single-trigger staging ⇒ identical batch). */
   val qStreamIncrementalFunnel: GraftQuery = GraftQuery(
     "q145_stream_incremental_funnel",
     graft.operators.CurationFunnel.qIncrementalFunnel.oracle.get) { (s, d) =>
-    streamMultiIndexes(s, d).curated
+    served(s, documents, d)("curate").rows
       .select("doc_id", "lang", "n_tok", "keep_exact", "keep_span", "keep_fluency")
       .orderBy("doc_id")
   }
 
-  /** Embeddings table as a file stream (same symlink staging as the
-    * events/documents streams); `srcDir` lets the spec stage a
-    * multi-file copy to force several micro-batches. */
-  private[graft] def readEmbeddingsStream(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val dir = srcDir.getOrElse(
-      stageAsStreamDir("graft_stream_emb", sfDir, "embeddings.parquet"))
-    val reader = spark.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(dir)
-  }
-
-  /** STREAMING ANN index ingest: q140's append path run inside
-    * foreachBatch — the live counterpart of batch index maintenance,
+  /** STREAMING ANN index ingest: q140's append path run per
+    * trigger — the live counterpart of batch index maintenance,
     * completing the index lifecycle (build q139 → append q140 →
     * stream-append q147 → compact q146). Each arriving vector
     * micro-batch is assigned to the EXISTING centroids (the collected
@@ -532,10 +882,12 @@ object Streams {
         "graft_ivfpq_streamdelta", srcDir.getOrElse(sfDir))
       graft.operators.Formats.wipe(deltaDir)
       withStreamShufflePartitions(spark) {
-        val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-          .where(pmod(col("vec_id"), lit(5)) === 4)
+        val stream = readStream(spark, embeddings, sfDir, srcDir,
+          maxFilesPerTrigger).where(pmod(col("vec_id"), lit(5)) === 4)
         val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
+          // no partial contract: appendBatch writes the index's own
+          // cell-partitioned PQ segment, which search scans as-is
+          .foreachBatch { (batch: Dataset[Row], bid: Long) =>
             graft.operators.IvfPq.appendBatch(spark, sfDir, batch, deltaDir, bid)
             ()
           }
@@ -569,42 +921,10 @@ object Streams {
     * O(batch queries × probed cells) — the serving cost a RAG
     * inference tier actually pays, with zero per-query driver
     * round-trips inside each batch. */
-  def streamBatchServe(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import graft.operators.{IvfAnn, IvfPq}
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val centroids = IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride)
-    val fullPath = IvfPq.codesSegment(spark, sfDir, "full",
-      IvfAnn.assign(emb, centroids))
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_serve", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .where(pmod(col("vec_id"), lit(IvfPq.batchQueryMod)) === 0)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          if (!batch.isEmpty) {
-            val queries = batch.toDF()
-              .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-            IvfPq.batchServe(spark, Seq(fullPath), centroids, queries, emb)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(outDir)
-      .select("query_id", "rank", "vec_id", "exact_dist")
-      .orderBy("query_id", "rank")
-  }
-
   val qStreamBatchServe: GraftQuery = GraftQuery(
     "q314_stream_batch_serve",
     graft.operators.IvfPq.qIvfPqBatchServe.oracle.get) { (s, d) =>
-    streamBatchServe(s, d)
+    streamServe(s, d, None, None, planned = false)
   }
 
   /** STREAMING PLANNER-DRIVEN SERVE — q328's composition run as the
@@ -623,44 +943,20 @@ object Streams {
     * 100 TB/day: the planner eval runs once per policy refresh (or on
     * the q340 hash sample at query-log scale); per trigger the work
     * is O(batch queries × planned probed cells). */
-  def streamPlannedServe(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import graft.operators.{IvfAnn, IvfPq}
-    val p = IvfPq.nProbeForRecall(spark, sfDir, IvfPq.plannedTargetPct)
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val centroids = IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride)
-    val fullPath = IvfPq.codesSegment(spark, sfDir, "full",
-      IvfAnn.assign(emb, centroids))
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_planned_serve", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .where(pmod(col("vec_id"), lit(IvfPq.batchQueryMod)) === 0)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          if (!batch.isEmpty) {
-            val queries = batch.toDF()
-              .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-            IvfPq.batchServe(spark, Seq(fullPath), centroids, queries, emb,
-              probes = p)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(outDir)
-      .select("query_id", "rank", "vec_id", "exact_dist")
-      .orderBy("query_id", "rank")
-  }
-
   val qStreamPlannedServe: GraftQuery = GraftQuery(
     "q341_stream_planned_serve",
     graft.operators.IvfPq.qPlannedServe.oracle.get) { (s, d) =>
-    streamPlannedServe(s, d)
+    streamServe(s, d, None, None, planned = true)
+  }
+
+  /** q314/q341: the arriving query micro-batches served by a
+    * ONE-maintainer embeddings drain (see [[servingMaintainer]]). */
+  private[graft] def streamServe(spark: SparkSession, sfDir: String,
+      srcDir: Option[String], maxFilesPerTrigger: Option[Int],
+      planned: Boolean): DataFrame = {
+    val m = servingMaintainer(spark, sfDir, planned)
+    drain(spark, embeddings, Seq(m), sfDir, srcDir, maxFilesPerTrigger)(m.name)
+      .rows.orderBy("query_id", "rank")
   }
 
   /** STREAMING COMPACTION-POLICY MAINTENANCE — q342's decision kept
@@ -694,119 +990,10 @@ object Streams {
       maxFilesPerTrigger: Option[Int] = None): DataFrame =
     compactionPolicyIndex.getOrElseUpdate(
       spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      drainCompactionPolicy(spark, sfDir, srcDir, maxFilesPerTrigger)
+      graft.operators.Compaction.policyFromCensus(
+        served(spark, embeddings, sfDir, srcDir, maxFilesPerTrigger)(
+          "compact_census").rows)
         .localCheckpoint())
-
-  private def drainCompactionPolicy(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DataFrame =
-    graft.operators.Compaction.policyFromCensus(
-      streamEmbPartials(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .compactCensus)
-
-  /** Everything the ONE-PASS embeddings-ingest drain maintains: the
-    * Gram moment partials (q298's), the hard-negative argmax partials
-    * (q325's), the compaction-policy segment census (q344's, summed),
-    * and the centroid drift census (q357's, summed). */
-  private[graft] final case class EmbIndexes(
-      gramPartials: DataFrame,
-      hardnegPartials: DataFrame,
-      compactCensus: DataFrame,
-      driftCensus: DataFrame)
-
-  /** ONE embeddings-ingest drain for the four vector-fed maintainers
-    * — the doc multi-drain discipline on the embeddings source: the
-    * trigger's vectors are persisted once and every maintainer
-    * featurizes from that cached batch (Gram cells, anchor argmax,
-    * segment census on the delta split, drift double-assign against
-    * the two bounded centroid literals). Single-drain twins stay
-    * untouched; every serving query keeps its batch oracle. */
-  private val embPartialsMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
-      EmbIndexes]("streams.embPartials")(m => {
-      val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-      Seq(m.gramPartials, m.hardnegPartials, m.compactCensus, m.driftCensus)
-        .foreach(release)
-    })
-
-  private def streamEmbPartials(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): EmbIndexes =
-    embPartialsMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
-      import graft.operators.{Compaction, HardNegatives, IvfAnn, Similarity}
-      import org.apache.spark.sql.graftshim.TopKByScore
-      val key = srcDir.getOrElse(sfDir)
-      val gramDir = graft.operators.Formats.scratchDir(
-        "graft_stream_pca_multi", key)
-      val hnDir = graft.operators.Formats.scratchDir(
-        "graft_stream_hardneg_multi", key)
-      val cmpDir = graft.operators.Formats.scratchDir(
-        "graft_stream_compact_census_multi", key)
-      val drfDir = graft.operators.Formats.scratchDir(
-        "graft_stream_refresh_census_multi", key)
-      val all = Seq(gramDir, hnDir, cmpDir, drfDir)
-      all.foreach(graft.operators.Formats.wipe)
-      all.foreach(p =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)))
-      val emb = graft.sources.Tables.embeddings(spark, sfDir)
-      val anchors = emb
-        .where(pmod(col("vec_id"), lit(HardNegatives.anchorStride)) === 0)
-        .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-          col("label").as("a_label"))
-      val pc = IvfAnn.collectCents(
-        IvfAnn.fixedCentroids(emb, IvfAnn.fixedStride))
-      val rc = IvfAnn.collectCents(IvfAnn.refitSample(emb))
-      withStreamShufflePartitions(spark) {
-        val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            val b = batch.toDF().persist()
-            try {
-              if (!b.isEmpty) {
-                graft.operators.Pca.gramPartial(b)
-                  .write.mode("append").parquet(gramDir)
-                b.join(broadcast(anchors), col("label") =!= col("a_label"))
-                  .select(col("a_id"), col("a_label"),
-                    col("vec_id").as("neg_id"),
-                    Similarity.cosine(col("a_emb"), col("embedding")).as("cos"))
-                  .groupBy("a_id", "a_label")
-                  .agg(TopKByScore(col("cos"), col("neg_id"), 1).as("t"))
-                  .select(col("a_id"), col("a_label"),
-                    element_at(col("t"), 1).getField("id").as("neg_id"),
-                    element_at(col("t"), 1).getField("score").as("cos"))
-                  .write.mode("append").parquet(hnDir)
-                val delta = b.where(pmod(col("vec_id"), lit(5)) === 4)
-                if (!delta.isEmpty) {
-                  delta
-                    .withColumn("seg_id", Compaction.segIdExpr)
-                    .groupBy("seg_id").agg(count(lit(1)).as("n_partial"))
-                    .write.mode("overwrite").parquet(s"$cmpDir/batch=$bid")
-                }
-                IvfAnn.driftCensusPartial(b, pc, rc)
-                  .write.mode("overwrite").parquet(s"$drfDir/batch=$bid")
-              }
-            } finally { b.unpersist(); () }
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      EmbIndexes(
-        gramPartials = spark.read.parquet(gramDir).localCheckpoint(),
-        hardnegPartials = spark.read
-          .schema("a_id BIGINT, a_label INT, neg_id BIGINT, cos DOUBLE")
-          .parquet(hnDir).localCheckpoint(),
-        compactCensus = spark.read.parquet(cmpDir)
-          .groupBy("seg_id").agg(sum("n_partial").as("n_rows"))
-          .localCheckpoint(),
-        driftCensus = spark.read
-          .schema("cell_old BIGINT, n_rows BIGINT, n_moved BIGINT")
-          .parquet(drfDir)
-          .groupBy("cell_old")
-          .agg(sum("n_rows").as("n_rows"), sum("n_moved").as("n_moved"))
-          .localCheckpoint())
-    }
 
   val qStreamCompactionPolicy: GraftQuery = GraftQuery(
     "q344_stream_compaction_policy",
@@ -828,16 +1015,12 @@ object Streams {
     * so the hash match proves the monoid maintenance converges to the
     * batch-built index under any arrival slicing. */
   /** The drained simhash census, materialized once per (session,
-    * corpus, staging dir, trigger config): q350 and q351 share ONE
-    * stream drain, and the checkpoint barrier decouples the returned
-    * relation from the scratch directory — a later re-drain wipes and
-    * rewrites those files, which would otherwise invalidate a
-    * previously returned lazy census's file listing. The guard
-    * statistics ride in the memo (computed ONCE over the drained,
-    * checkpointed census — band-bucket occupancy is a DISTINCT-value
-    * count, not additive across arriving batches, so it derives from
-    * the summed census, never from per-trigger partials) and make the
-    * q351 probe corpus-aggregate-free. Released on eviction. */
+    * corpus, staging dir, trigger config) through a ONE-maintainer
+    * drain — the streaming cost a standalone census tier pays (q350/
+    * q351 themselves read the documents `drain(all)`). The guard
+    * statistics ride in the memo, computed once over the drained,
+    * checkpointed census, and make a probe corpus-aggregate-free.
+    * Released on eviction. */
   private val simhashCensusIndex =
     new graft.spark.SessionMemo[
       (String, Option[String], Option[Int]),
@@ -851,109 +1034,13 @@ object Streams {
       : graft.operators.BandedHamming.StatedIndex =
     simhashCensusIndex.getOrElseUpdate(
       spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      graft.operators.Dedup.simhashScheme.indexed(
-        drainSimhashCensus(spark, sfDir, srcDir, maxFilesPerTrigger)
-          .localCheckpoint()))
-
-  /** THE parameterized streaming value-census maintainer behind every
-    * corpus-index tier (simhash q350, image q355, audio q358, wide
-    * video q360): corpus documents arrive as micro-batches;
-    * `featurize` turns each batch's documents into fingerprint rows
-    * (synthesis + decode stay inside the partition — payloads never
-    * cross an exchange or land in the sink); the per-batch census
-    * partial OVERWRITES a batchId-keyed sink (replay-idempotent — a
-    * retried trigger rewrites, never double-counts); the serve
-    * re-sums. Counts add — every value census is a monoid — so the
-    * drained relation is the batch-built corpus index VERBATIM under
-    * any arrival slicing, proven per tier by the corpus-census oracle.
-    * `partialSchema` pins the read-back types so each tier's output
-    * schema matches its oracle exactly. `corpusFilter` selects which
-    * arriving documents belong to the maintained corpus — a caller
-    * concern (the current tiers pass the [[fixtureCorpusFilter]]
-    * split), never a constant of the maintainer.
-    *
-    * `onPrefix` is the PREFIX-SERVEABILITY observation hook: when
-    * present, it fires after every non-empty trigger with (the
-    * trigger's doc ids, the census summed over every partial written
-    * SO FAR) — the relation a mid-stream probe would serve from.
-    * StreamsSpec drives it to assert that probing the
-    * partially-maintained census at EVERY prefix equals the batch
-    * probe over the prefix corpus (drained ≡ batch applied at every
-    * trigger boundary, not just at the end). Production drains pass
-    * None and pay nothing. */
-  private[graft] final case class CensusTier(
-      scratch: String,
-      groupCols: Seq[String],
-      partialSchema: String,
-      scheme: graft.operators.BandedHamming.BandScheme,
-      featurize: DataFrame => DataFrame)
-
-  private[graft] def drainValueCensus(spark: SparkSession,
-      tier: CensusTier, sfDir: String, srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int], corpusFilter: Column,
-      onPrefix: Option[(Seq[Long], DataFrame) => Unit] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      tier.scratch, srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    // a drain whose every trigger is empty (all docs filtered out)
-    // writes no partial — the read-back must see an empty DIRECTORY,
-    // not a missing path (explicit schema makes the empty read valid)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    def summedCensus: DataFrame =
-      spark.read.schema(tier.partialSchema).parquet(outDir)
-        .groupBy(tier.groupCols.map(col): _*)
-        .agg(sum("n_partial").as("n_docs"))
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .where(corpusFilter)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          if (!batch.isEmpty) {
-            tier.featurize(batch.toDF())
-              .groupBy(tier.groupCols.map(col): _*)
-              .agg(count(lit(1)).as("n_partial"))
-              .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
-            onPrefix.foreach(f => f(
-              batch.toDF().select("doc_id")
-                .collect().map(_.getLong(0)).toSeq,
-              summedCensus))
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    summedCensus
-  }
-
-  /** The incremental-dedup FIXTURES' batch/corpus split (q345/q349/
-    * q353/q354 and their streaming twins): doc_id % 5 == 4 is the
-    * arriving batch, everything else the maintained corpus. A fixture
-    * convention, passed to [[drainValueCensus]] by each tier — the
-    * shared maintainer itself is fixture-agnostic. */
-  private[graft] def fixtureCorpusFilter: Column =
-    pmod(col("doc_id"), lit(5)) =!= 4
-
-  /** The four census tiers, each pairing the maintainer's featurize
-    * with the banding scheme its probes use. */
-  private[graft] val simhashCensusTier = CensusTier(
-    "graft_stream_simhash_census", Seq("simhash"),
-    "simhash BIGINT, n_partial BIGINT",
-    graft.operators.Dedup.simhashScheme,
-    b => b.select(org.apache.spark.sql.graftshim.SimHashMd5(
-      graft.functions.TextFunctions.distinctTokens(
-        lower(col("text")))).as("simhash")))
-
-  private def drainSimhashCensus(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DataFrame =
-    drainValueCensus(spark, simhashCensusTier, sfDir, srcDir,
-      maxFilesPerTrigger, fixtureCorpusFilter)
+      drain(spark, documents, Seq(simhashCensus), sfDir, srcDir,
+        maxFilesPerTrigger)(simhashCensus.name).stated)
 
   val qStreamSimhashCensus: GraftQuery = GraftQuery(
     "q350_stream_simhash_census",
     graft.operators.Dedup.simhashCorpusCensusSql) { (s, d) =>
-    streamMultiIndexes(s, d).simhash.rows.orderBy("simhash")
+    served(s, documents, d)("simhash_census").rows.orderBy("simhash")
   }
 
   /** INCREMENTAL DEDUP AGAINST THE STREAM-MAINTAINED INDEX — q345's
@@ -970,56 +1057,13 @@ object Streams {
     "q351_stream_simhash_probe",
     graft.operators.Dedup.qSimhashNearDupBatch.oracle.get) { (s, d) =>
     graft.operators.Dedup.simhashBatchProbe(s, d,
-      streamMultiIndexes(s, d).simhash)
+      served(s, documents, d)("simhash_census").stated)
   }
-
-  /** The drained image census, materialized once per (session,
-    * corpus, staging dir) — the q350 discipline on the image tier
-    * (see [[simhashCensusIndex]] for the barrier rationale). */
-  private val imageCensusIndex =
-    new graft.spark.SessionMemo[
-      (String, Option[String], Option[Int]),
-      graft.operators.BandedHamming.StatedIndex](
-      "streams.imageCensus")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
-
-  /** STREAMING MAINTENANCE OF THE IMAGE CORPUS INDEX — q350's monoid
-    * discipline on the REAL-CODEC tier: each arriving corpus
-    * micro-batch synthesizes and decodes only ITS OWN PNG payloads
-    * (executor-global decoder pool — constructions bounded by peak
-    * task concurrency, not trigger count; payloads are born and
-    * consumed inside the partition, no image bytes cross an exchange
-    * or land in the sink) and overwrites one batchId-keyed partial
-    * aHash census. The drained sum is the q349 corpus index VERBATIM
-    * — the multimodal corpus is never re-decoded, which at 100 TB is
-    * the difference between a census refresh and a full decode pass
-    * over the archive. */
-  def streamImageCensus(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None)
-      : graft.operators.BandedHamming.StatedIndex =
-    imageCensusIndex.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      graft.operators.Multimodal.imageScheme.indexed(
-        drainImageCensus(spark, sfDir, srcDir, maxFilesPerTrigger)
-          .localCheckpoint()))
-
-  private[graft] val imageCensusTier = CensusTier(
-    "graft_stream_image_census", Seq("ahash_hi", "ahash_lo"),
-    "ahash_hi BIGINT, ahash_lo BIGINT, n_partial BIGINT",
-    graft.operators.Multimodal.imageScheme,
-    graft.operators.Multimodal.imageAHashesFromDocs)
-
-  private def drainImageCensus(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DataFrame =
-    drainValueCensus(spark, imageCensusTier, sfDir, srcDir,
-      maxFilesPerTrigger, fixtureCorpusFilter)
 
   val qStreamImageCensus: GraftQuery = GraftQuery(
     "q355_stream_image_census",
     graft.operators.Multimodal.imageCorpusCensusSql) { (s, d) =>
-    streamMultiIndexes(s, d).image.rows.orderBy("ahash_hi", "ahash_lo")
+    served(s, documents, d)("image_census").rows.orderBy("ahash_hi", "ahash_lo")
   }
 
   /** INCREMENTAL IMAGE DEDUP AGAINST THE STREAM-MAINTAINED INDEX —
@@ -1031,42 +1075,13 @@ object Streams {
     "q356_stream_image_probe",
     graft.operators.Multimodal.qImageNearDupBatch.oracle.get) { (s, d) =>
     graft.operators.Multimodal.imageBatchProbe(s, d,
-      streamMultiIndexes(s, d).image)
+      served(s, documents, d)("image_census").stated)
   }
-
-  /** The drained audio census (see [[simhashCensusIndex]]). */
-  private val audioCensusIndex =
-    new graft.spark.SessionMemo[
-      (String, Option[String], Option[Int]),
-      graft.operators.BandedHamming.StatedIndex](
-      "streams.audioCensus")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
-
-  /** Streaming maintenance of the q353 audio corpus index — the
-    * shared [[drainValueCensus]] maintainer with the audio featurize
-    * (WAV synthesis + real-codec decode per partition, one decoder
-    * per task disposed on completion). */
-  private[graft] val audioCensusTier = CensusTier(
-    "graft_stream_audio_census", Seq("fingerprint"),
-    "fingerprint BIGINT, n_partial BIGINT",
-    graft.operators.Multimodal.audioScheme,
-    graft.operators.Multimodal.audioFingerprintsFromDocs)
-
-  def streamAudioCensus(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None)
-      : graft.operators.BandedHamming.StatedIndex =
-    audioCensusIndex.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      graft.operators.Multimodal.audioScheme.indexed(
-        drainValueCensus(spark, audioCensusTier, sfDir, srcDir,
-          maxFilesPerTrigger, fixtureCorpusFilter)
-          .localCheckpoint()))
 
   val qStreamAudioCensus: GraftQuery = GraftQuery(
     "q358_stream_audio_census",
     graft.operators.Multimodal.audioCorpusCensusSql) { (s, d) =>
-    streamMultiIndexes(s, d).audio.rows.orderBy("fingerprint")
+    served(s, documents, d)("audio_census").rows.orderBy("fingerprint")
   }
 
   /** q353's probe against the stream-maintained audio index (oracle
@@ -1075,45 +1090,13 @@ object Streams {
     "q359_stream_audio_probe",
     graft.operators.Multimodal.qAudioNearDupBatch.oracle.get) { (s, d) =>
     graft.operators.Multimodal.audioBatchProbe(s, d,
-      streamMultiIndexes(s, d).audio)
+      served(s, documents, d)("audio_census").stated)
   }
-
-  /** The drained wide-video census (see [[simhashCensusIndex]]). */
-  private val videoWideCensusIndex =
-    new graft.spark.SessionMemo[
-      (String, Option[String], Option[Int]),
-      graft.operators.BandedHamming.StatedIndex](
-      "streams.videoWideCensus")(i =>
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows))
-
-  /** Streaming maintenance of the q354 wide-video corpus index; the
-    * census key carries the clip width (n_sampled pinned INTEGER so
-    * the drained schema matches the oracle's). */
-  private[graft] val videoWideCensusTier = CensusTier(
-    "graft_stream_videow_census",
-    graft.operators.Multimodal.videoWideCensusCols,
-    graft.operators.Multimodal.videoWideCensusCols.map {
-      case "n_sampled" => "n_sampled INT"
-      case c => s"$c BIGINT"
-    }.mkString(", ") + ", n_partial BIGINT",
-    graft.operators.Multimodal.videoWideScheme,
-    graft.operators.Multimodal.videoWideFromDocs)
-
-  def streamVideoWideCensus(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None)
-      : graft.operators.BandedHamming.StatedIndex =
-    videoWideCensusIndex.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      graft.operators.Multimodal.videoWideScheme.indexed(
-        drainValueCensus(spark, videoWideCensusTier, sfDir, srcDir,
-          maxFilesPerTrigger, fixtureCorpusFilter)
-          .localCheckpoint()))
 
   val qStreamVideoWideCensus: GraftQuery = GraftQuery(
     "q360_stream_videow_census",
     graft.operators.Multimodal.videoWideCorpusCensusSql) { (s, d) =>
-    streamMultiIndexes(s, d).videoWide.rows
+    served(s, documents, d)("videow_census").rows
       .orderBy(graft.operators.Multimodal.videoWideCensusCols.map(col): _*)
   }
 
@@ -1123,115 +1106,8 @@ object Streams {
     "q361_stream_videow_probe",
     graft.operators.Multimodal.qVideoNearDupWideBatch.oracle.get) { (s, d) =>
     graft.operators.Multimodal.videoWideBatchProbe(
-      s, d, streamMultiIndexes(s, d).videoWide)
+      s, d, served(s, documents, d)("videow_census").stated)
   }
-
-  /** STREAMING MAINTENANCE OF THE MINHASH BAND INDEX — the q350
-    * discipline on the JACCARD tier, closing the one corpus index the
-    * streaming matrix did not yet maintain (q94's probe target). The
-    * band index is per-doc APPEND, not a count census: each arriving
-    * corpus micro-batch signs only ITS OWN documents (the fused
-    * MinHashBandHashes expression — shingles/digests never
-    * materialize) and overwrites one batchId-keyed partial of
-    * (doc_id, band_id, band_hash) rows; a retried trigger rewrites,
-    * never duplicates, and the drained UNION is the batch-built band
-    * index VERBATIM under any arrival slicing — each document
-    * contributes its band rows exactly once. The corpus is never
-    * re-shingled: per trigger the work is one signature pass over the
-    * batch, the 100 TB difference between maintaining the dedup index
-    * and rebuilding it per ingest. Oracle: the same bands CTE q94
-    * probes, restricted to the corpus split. */
-  /** The drained band index, materialized once per (session, corpus,
-    * staging dir, trigger config) — see [[simhashCensusIndex]] for the
-    * barrier rationale. Held as a [[graft.operators.Dedup.BandIndex]]:
-    * the per-bucket census is maintained as its own batchId-keyed
-    * monoid partials (counts ADD) and summed at drain, so the probe's
-    * flood guard reads persisted counts instead of windowing the
-    * corpus index — and the maintained index carries the SAME stated
-    * shape as the batch-built one (r13, jaccard-tier gstats). */
-  private val minhashBandsIndex =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
-      graft.operators.Dedup.BandIndex](
-      "streams.minhashBands")(i => {
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.rows)
-      org.apache.spark.sql.graftshim.Checkpoints.release(i.bucketCounts)
-    })
-
-  def streamMinhashBandIndex(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None)
-      : graft.operators.Dedup.BandIndex =
-    minhashBandsIndex.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
-      val (i, _, _) = drainMinhashBands(spark, sfDir, srcDir, maxFilesPerTrigger)
-      graft.operators.Dedup.BandIndex(
-        i.rows.localCheckpoint(), i.bucketCounts.localCheckpoint())
-    }
-
-  /** The maintained band index's ROWS (q363's oracle surface). */
-  def streamMinhashBands(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    streamMinhashBandIndex(spark, sfDir, srcDir, maxFilesPerTrigger).rows
-
-  /** Runs the drain; returns the lazy drained index plus the two
-    * partial-log directories (so [[compactBandPartials]] can fold them
-    * before the serve checkpoint). */
-  private def drainMinhashBands(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int])
-      : (graft.operators.Dedup.BandIndex, String, String) = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_minhash_bands", srcDir.getOrElse(sfDir))
-    val cntDir = graft.operators.Formats.scratchDir(
-      "graft_stream_minhash_band_counts", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    graft.operators.Formats.wipe(cntDir)
-    // see drainValueCensus: an all-empty drain must read back as an
-    // empty band index, not a missing path
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cntDir))
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-        .where(pmod(col("doc_id"), lit(2)) === 0) // q94's corpus split
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          if (!batch.isEmpty) {
-            // one signature pass per trigger: bands land in the row
-            // partial; the bucket-count partial derives from THOSE
-            // written rows (a read-back of the just-written partial,
-            // not a second signing) so rows and counts can never
-            // disagree — counts are a monoid, summed at drain
-            graft.operators.Dedup.docBands(batch.toDF())
-              .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
-            spark.read
-              .schema("doc_id BIGINT, band_id INT, band_hash STRING")
-              .parquet(s"$outDir/batch=$bid")
-              .groupBy("band_id", "band_hash")
-              .agg(count(lit(1)).as("n_partial"))
-              .write.mode("overwrite").parquet(s"$cntDir/batch=$bid")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    (readBandLog(spark, outDir, cntDir), outDir, cntDir)
-  }
-
-  /** Serve the partial log as a [[graft.operators.Dedup.BandIndex]].
-    * The parquet file listing resolves at READ construction, so this
-    * must be called (again) after any fold rewrites the log. */
-  private def readBandLog(spark: SparkSession, outDir: String,
-      cntDir: String): graft.operators.Dedup.BandIndex =
-    graft.operators.Dedup.BandIndex(
-      spark.read.schema("doc_id BIGINT, band_id INT, band_hash STRING")
-        .parquet(outDir)
-        .select("doc_id", "band_id", "band_hash"),
-      spark.read.schema("band_id INT, band_hash STRING, n_partial BIGINT")
-        .parquet(cntDir)
-        .groupBy("band_id", "band_hash")
-        .agg(sum("n_partial").as("n_corpus")))
 
   /** SIZE-TIERED COMPACTION OF THE MAINTAINED BAND-INDEX PARTIAL LOG
     * (r12 verdict: the q363 index accumulated one parquet directory
@@ -1314,16 +1190,17 @@ object Streams {
       graft.operators.Formats.wipe(stage)
       graft.sources.Tables.documents(spark, sfDir).repartition(8)
         .write.mode("overwrite").parquet(stage)
-      val (_, outDir, cntDir) =
-        drainMinhashBands(spark, sfDir, Some(stage), Some(1))
-      val folds = compactBandPartials(spark, outDir, cntDir)
+      drain(spark, documents, Seq(minhashBands), sfDir, Some(stage), Some(1))
+        .values.foreach(_.release())
+      val dir = logDir(minhashBands, stage)
+      val folds = compactBandPartials(spark, dir, dir + "_counts")
       require(folds >= 1,
         s"compaction fixture staged 8 same-tier partials but folded $folds tiers")
       // re-read: the fold rewrote the log, and parquet file listings
       // resolve at read construction
-      val i = readBandLog(spark, outDir, cntDir)
+      val (rows, counts) = readLog(spark, minhashBands, dir)
       graft.operators.Dedup.BandIndex(
-        i.rows.localCheckpoint(), i.bucketCounts.localCheckpoint())
+        rows.localCheckpoint(), counts.get.localCheckpoint())
     }
 
   /** q365: q94's probe against the maintained-then-compacted band
@@ -1336,211 +1213,6 @@ object Streams {
       streamMinhashBandIndexCompacted(s, d))
   }
 
-  /** Everything the ONE-PASS document-ingest drain maintains: the
-    * five dedup corpus indexes (the four value censuses as stated
-    * indexes plus the MinHash band index) and the monoid partial logs
-    * / featurized sinks of every other document-stream maintainer —
-    * count-min counters (q153), drift counters (q165), KMV sketch
-    * partials (q229), PSI length census (q278), CDC latest-version
-    * partials (q282), Merkle leaf partials (q288), CDC chunk census
-    * partials (q312), curation decisions (q145), decoded image
-    * features (q131). */
-  private[graft] final case class DocIndexes(
-      simhash: graft.operators.BandedHamming.StatedIndex,
-      image: graft.operators.BandedHamming.StatedIndex,
-      audio: graft.operators.BandedHamming.StatedIndex,
-      videoWide: graft.operators.BandedHamming.StatedIndex,
-      bands: graft.operators.Dedup.BandIndex,
-      cmsPartials: DataFrame,
-      driftPartials: DataFrame,
-      kmvPartials: DataFrame,
-      psiPartials: DataFrame,
-      cdcPartials: DataFrame,
-      merklePartials: DataFrame,
-      chunkPartials: DataFrame,
-      curated: DataFrame,
-      imageFeatures: DataFrame)
-
-  private val multiIndexMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
-      DocIndexes]("streams.multiIndex")(m => {
-      val release = org.apache.spark.sql.graftshim.Checkpoints.release _
-      Seq(m.simhash.rows, m.image.rows, m.audio.rows, m.videoWide.rows,
-        m.bands.rows, m.bands.bucketCounts, m.cmsPartials, m.driftPartials,
-        m.kmvPartials, m.psiPartials, m.cdcPartials, m.merklePartials,
-        m.chunkPartials, m.curated, m.imageFeatures).foreach(release)
-    })
-
-  def streamMultiIndexes(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DocIndexes =
-    multiIndexMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      drainMultiIndexes(spark, sfDir, srcDir, maxFilesPerTrigger))
-
-  /** SINGLE-PASS MULTI-INDEX MAINTENANCE (r12 verdict #5, widened to
-    * the whole document family in r14 per the r13 verdict's #1): the
-    * per-tier maintainers each open their own stream over the same
-    * document arrivals — correct, but at 100 TB that is N reads of
-    * the ingest, and at any scale it is N stream setups + drains.
-    * This drain opens ONE stream and updates EVERY document-fed
-    * maintained artifact per trigger — the four value censuses, the
-    * stated MinHash band index, and the monoid partial logs /
-    * featurized sinks of the other document maintainers — so the
-    * ingest bytes are read once: the trigger's documents are
-    * persisted, every index featurizes from that cached batch, and
-    * each keeps its OWN per-batch partial contract in a tier-owned
-    * `_multi` scratch dir (the single-drain twins stay untouched,
-    * which is what makes the equivalence provable). Per-index corpus
-    * filters apply inside the trigger — filters are an index concern,
-    * not a stream concern, exactly as in the single drains. q366
-    * oracle-pairs the simhash census; every serving query is oracle-
-    * paired with its batch SQL; StreamsSpec pins the maintained
-    * artifacts against their single-drain twins and asserts the whole
-    * drain started exactly one streaming query. */
-  private def drainMultiIndexes(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DocIndexes = {
-    val key = srcDir.getOrElse(sfDir)
-    val simDir = graft.operators.Formats.scratchDir(
-      simhashCensusTier.scratch + "_multi", key)
-    val imgDir = graft.operators.Formats.scratchDir(
-      imageCensusTier.scratch + "_multi", key)
-    val audDir = graft.operators.Formats.scratchDir(
-      audioCensusTier.scratch + "_multi", key)
-    val vidDir = graft.operators.Formats.scratchDir(
-      videoWideCensusTier.scratch + "_multi", key)
-    val bandDir = graft.operators.Formats.scratchDir(
-      "graft_stream_minhash_bands_multi", key)
-    val bandCntDir = graft.operators.Formats.scratchDir(
-      "graft_stream_minhash_band_counts_multi", key)
-    val cmsDir = graft.operators.Formats.scratchDir(
-      "graft_stream_cms_multi", key)
-    val driftDir = graft.operators.Formats.scratchDir(
-      "graft_stream_drift_multi", key)
-    val kmvDir = graft.operators.Formats.scratchDir(
-      "graft_stream_kmv_multi", key)
-    val psiDir = graft.operators.Formats.scratchDir(
-      "graft_stream_psi_multi", key)
-    val cdcDir = graft.operators.Formats.scratchDir(
-      "graft_stream_cdc_multi", key)
-    val merkleDir = graft.operators.Formats.scratchDir(
-      "graft_stream_merkle_multi", key)
-    val chunkDir = graft.operators.Formats.scratchDir(
-      "graft_stream_cdc_census_multi", key)
-    val curateDir = graft.operators.Formats.scratchDir(
-      "graft_stream_curate_multi", key)
-    val imgFeatDir = graft.operators.Formats.scratchDir(
-      "graft_stream_imgfeat_multi", key)
-    val all = Seq(simDir, imgDir, audDir, vidDir, bandDir, bandCntDir,
-      cmsDir, driftDir, kmvDir, psiDir, cdcDir, merkleDir, chunkDir,
-      curateDir, imgFeatDir)
-    all.foreach(graft.operators.Formats.wipe)
-    all.foreach(p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)))
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          // one read of the trigger's bytes: every index works off
-          // the cached batch
-          val b = batch.toDF().persist()
-          try {
-            if (!b.isEmpty) {
-              val census = b.where(fixtureCorpusFilter)
-              Seq(simhashCensusTier -> simDir,
-                  imageCensusTier -> imgDir,
-                  audioCensusTier -> audDir,
-                  videoWideCensusTier -> vidDir).foreach { case (t, dir) =>
-                t.featurize(census)
-                  .groupBy(t.groupCols.map(col): _*)
-                  .agg(count(lit(1)).as("n_partial"))
-                  .write.mode("overwrite").parquet(s"$dir/batch=$bid")
-              }
-              val corp = b.where(pmod(col("doc_id"), lit(2)) === 0)
-              graft.operators.Dedup.docBands(corp)
-                .write.mode("overwrite").parquet(s"$bandDir/batch=$bid")
-              spark.read
-                .schema("doc_id BIGINT, band_id INT, band_hash STRING")
-                .parquet(s"$bandDir/batch=$bid")
-                .groupBy("band_id", "band_hash")
-                .agg(count(lit(1)).as("n_partial"))
-                .write.mode("overwrite").parquet(s"$bandCntDir/batch=$bid")
-              // the append-contract monoid partials, exactly as their
-              // single drains write them
-              graft.operators.Selection
-                .cmPartialSketch(graft.operators.Selection.docTokens(b))
-                .write.mode("append").parquet(cmsDir)
-              graft.operators.Selection.driftPartial(b)
-                .write.mode("append").parquet(driftDir)
-              graft.operators.KmvSketch.partialSketch(b)
-                .write.mode("append").parquet(kmvDir)
-              graft.operators.TrendStats.lengthCensus(b)
-                .write.mode("append").parquet(psiDir)
-              graft.operators.ModelQueries.cdcLatest(
-                graft.operators.ModelQueries.cdcLog(b))
-                .write.mode("append").parquet(cdcDir)
-              graft.operators.ModelQueries.merkleLeaf(
-                b.select(col("doc_id"), md5(col("text")).as("fp")),
-                "n_a", "f_a")
-                .write.mode("append").parquet(merkleDir)
-              graft.operators.CdcChunking.cdcChunks(b)
-                .groupBy("chunk_md5")
-                .agg(count(lit(1)).as("n_occurrences"),
-                  countDistinct(col("doc_id")).as("n_docs"),
-                  min(col("doc_id")).as("min_doc"),
-                  max(col("chunk_len")).as("chunk_len"))
-                .write.mode("append").parquet(chunkDir)
-              // featurize/gate stages: the sink IS the product a
-              // downstream trainer reads mid-stream
-              graft.operators.CurationFunnel.curateBatch(spark, sfDir,
-                b.where(pmod(col("doc_id"), lit(5)) === 4))
-                .withColumn("batch_id", lit(bid))
-                .write.mode("append").parquet(curateDir)
-              val imgs = b.select(col("doc_id"))
-                .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-                .mapPartitions(ids => ids.map(id =>
-                  graft.operators.Multimodal.ImageRow(id,
-                    graft.operators.Multimodal.synthPng(id))))(
-                  org.apache.spark.sql.Encoders
-                    .product[graft.operators.Multimodal.ImageRow])
-              graft.operators.Multimodal.decodeImagesPooled(imgs)
-                .write.mode("append").parquet(imgFeatDir)
-            }
-          } finally { b.unpersist(); () }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    def statedOf(dir: String, tier: CensusTier)
-        : graft.operators.BandedHamming.StatedIndex =
-      tier.scheme.indexed(
-        spark.read.schema(tier.partialSchema).parquet(dir)
-          .groupBy(tier.groupCols.map(col): _*)
-          .agg(sum("n_partial").as("n_docs"))
-          .localCheckpoint())
-    val bandLog = readBandLog(spark, bandDir, bandCntDir)
-    DocIndexes(
-      simhash = statedOf(simDir, simhashCensusTier),
-      image = statedOf(imgDir, imageCensusTier),
-      audio = statedOf(audDir, audioCensusTier),
-      videoWide = statedOf(vidDir, videoWideCensusTier),
-      bands = graft.operators.Dedup.BandIndex(
-        bandLog.rows.localCheckpoint(),
-        bandLog.bucketCounts.localCheckpoint()),
-      cmsPartials = spark.read.parquet(cmsDir).localCheckpoint(),
-      driftPartials = spark.read.parquet(driftDir).localCheckpoint(),
-      kmvPartials = spark.read.schema("source STRING, h BIGINT")
-        .parquet(kmvDir).localCheckpoint(),
-      psiPartials = spark.read.parquet(psiDir).localCheckpoint(),
-      cdcPartials = spark.read.parquet(cdcDir).localCheckpoint(),
-      merklePartials = spark.read.parquet(merkleDir).localCheckpoint(),
-      chunkPartials = spark.read.parquet(chunkDir).localCheckpoint(),
-      curated = spark.read.parquet(curateDir).localCheckpoint(),
-      imageFeatures = spark.read.parquet(imgFeatDir).localCheckpoint())
-  }
-
   /** q366: the simhash corpus census maintained by the SINGLE-PASS
     * multi-index drain, q350's oracle VERBATIM — one stream read
     * feeds every index and the maintained census is still the batch
@@ -1548,13 +1220,13 @@ object Streams {
   val qStreamMultiMaintenance: GraftQuery = GraftQuery(
     "q366_stream_multi_maintenance",
     graft.operators.Dedup.simhashCorpusCensusSql) { (s, d) =>
-    streamMultiIndexes(s, d).simhash.rows.orderBy("simhash")
+    served(s, documents, d)("simhash_census").rows.orderBy("simhash")
   }
 
   val qStreamMinhashBands: GraftQuery = GraftQuery(
     "q363_stream_minhash_bands",
     graft.operators.Dedup.minhashCorpusBandsSql) { (s, d) =>
-    streamMultiIndexes(s, d).bands.rows.orderBy("doc_id", "band_id")
+    served(s, documents, d)("minhash_bands").rows.orderBy("doc_id", "band_id")
   }
 
   /** INCREMENTAL JACCARD DEDUP AGAINST THE STREAM-MAINTAINED BAND
@@ -1569,7 +1241,7 @@ object Streams {
     "q364_stream_minhash_probe",
     graft.operators.Dedup.qDedupBatchVsCorpus.oracle.get) { (s, d) =>
     graft.operators.Dedup.minhashBatchProbe(s, d,
-      streamMultiIndexes(s, d).bands)
+      served(s, documents, d)("minhash_bands").bands)
   }
 
   /** STREAMING DRIFT MONITOR — q352's refresh decision maintained ON
@@ -1609,8 +1281,8 @@ object Streams {
   private def drainRefreshPolicy(spark: SparkSession, sfDir: String,
       srcDir: Option[String],
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val census = streamEmbPartials(spark, sfDir, srcDir, maxFilesPerTrigger)
-      .driftCensus
+    val census = served(spark, embeddings, sfDir, srcDir, maxFilesPerTrigger)(
+      "refresh_census").rows
     // the centroid literals (persisted + re-fit) derive from the sfDir
     // embeddings; a srcDir that does not RE-STAGE that same corpus
     // would drift-census one population against another's centroids —
@@ -1634,55 +1306,6 @@ object Streams {
     streamRefreshPolicy(s, d)
   }
 
-  /** STREAMING HARD-NEGATIVE MINING: q199's per-anchor argmax
-    * maintained as candidate vectors ARRIVE. Argmax under the
-    * (cos desc, id asc) total order is a MONOID — the fold of
-    * per-batch winners IS the global winner — so each micro-batch
-    * scores only ITS OWN vectors against the broadcast anchors and
-    * appends one bounded partial row per (anchor, batch); the serve
-    * re-folds with the same k=1 heap and is hash-identical to batch
-    * q199 under any arrival slicing (oracle verbatim). This is how a
-    * contrastive-training pipeline keeps its negative pool warm while
-    * the corpus grows: per trigger, work is O(batch × anchors), and
-    * the durable state is |anchors| rows per trigger, never vectors. */
-  def streamHardNegatives(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import graft.operators.{HardNegatives, Similarity}
-    import org.apache.spark.sql.graftshim.TopKByScore
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_hardneg", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val anchors = emb
-      .where(pmod(col("vec_id"), lit(HardNegatives.anchorStride)) === 0)
-      .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-        col("label").as("a_label"))
-    withStreamShufflePartitions(spark) {
-      val stream = readEmbeddingsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.toDF()
-            .join(broadcast(anchors), col("label") =!= col("a_label"))
-            .select(col("a_id"), col("a_label"), col("vec_id").as("neg_id"),
-              Similarity.cosine(col("a_emb"), col("embedding")).as("cos"))
-            .groupBy("a_id", "a_label")
-            .agg(TopKByScore(col("cos"), col("neg_id"), 1).as("t"))
-            .select(col("a_id"), col("a_label"),
-              element_at(col("t"), 1).getField("id").as("neg_id"),
-              element_at(col("t"), 1).getField("score").as("cos"))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    hardnegServe(spark, sfDir,
-      spark.read
-        .schema("a_id BIGINT, a_label INT, neg_id BIGINT, cos DOUBLE")
-        .parquet(outDir))
-  }
-
   /** q325's serve: fold per-batch winners with the same total order,
     * then attach the winner's label (|anchors| rows broadcast — a
     * point lookup against the corpus). */
@@ -1703,10 +1326,32 @@ object Streams {
       .orderBy("a_id")
   }
 
+  /** STREAMING HARD-NEGATIVE MINING: q199's per-anchor argmax
+    * maintained as candidate vectors ARRIVE. Argmax under the
+    * (cos desc, id asc) total order is a MONOID — the fold of
+    * per-batch winners IS the global winner — so each micro-batch
+    * scores only ITS OWN vectors against the broadcast anchors and
+    * appends one bounded partial row per (anchor, batch); the serve
+    * re-folds with the same k=1 heap and is hash-identical to batch
+    * q199 under any arrival slicing (oracle verbatim). This is how a
+    * contrastive-training pipeline keeps its negative pool warm while
+    * the corpus grows: per trigger, work is O(batch × anchors), and
+    * the durable state is |anchors| rows per trigger, never vectors. */
   val qStreamHardNegatives: GraftQuery = GraftQuery(
     "q325_stream_hard_negatives",
     graft.operators.HardNegatives.qHardNegatives.oracle.get) { (s, d) =>
-    hardnegServe(s, d, streamEmbPartials(s, d).hardnegPartials)
+    hardnegServe(s, d, served(s, embeddings, d)("hardneg").rows)
+  }
+
+  /** q153's serve: fold the counter partials into the whole-corpus
+    * sketch and point-query the exact top-20 (the oracle-check side). */
+  private[graft] def cmsServe(spark: SparkSession, sfDir: String,
+      partials: DataFrame): DataFrame = {
+    val sketch = graft.operators.Selection.cmMerge(partials)
+    val top = graft.operators.Selection.exactTop20(
+      graft.operators.Selection.docTokens(
+        graft.sources.Tables.documents(spark, sfDir)))
+    graft.operators.Selection.cmPointQuery(sketch, top)
   }
 
   /** STREAMING COUNT-MIN SKETCH: q151's frequency estimator maintained
@@ -1724,43 +1369,10 @@ object Streams {
     * 100 TB: the per-trigger state is the 2048-row partial, not the
     * tokens — a vocabulary-frequency monitor whose stream-side cost is
     * constant per batch. */
-  def streamCountMin(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_cms", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Selection
-            .cmPartialSketch(graft.operators.Selection.docTokens(batch.toDF()))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    cmsServe(spark, sfDir, spark.read.parquet(outDir))
-  }
-
-  /** q153's serve: fold the counter partials into the whole-corpus
-    * sketch and point-query the exact top-20 (the oracle-check side).
-    * Shared by the single drain and the multi-drain serve. */
-  private def cmsServe(spark: SparkSession, sfDir: String,
-      partials: DataFrame): DataFrame = {
-    val sketch = graft.operators.Selection.cmMerge(partials)
-    val top = graft.operators.Selection.exactTop20(
-      graft.operators.Selection.docTokens(
-        graft.sources.Tables.documents(spark, sfDir)))
-    graft.operators.Selection.cmPointQuery(sketch, top)
-  }
-
   val qStreamCountMin: GraftQuery = GraftQuery(
     "q153_stream_countmin",
     graft.operators.Selection.qCountMinTokens.oracle.get) { (s, d) =>
-    cmsServe(s, d, streamMultiIndexes(s, d).cmsPartials)
+    cmsServe(s, d, served(s, documents, d)("cms").rows)
   }
 
   /** STREAMING DRIFT MONITOR: q160's snapshot-distribution comparison
@@ -1770,37 +1382,16 @@ object Streams {
     * batch build (q160's oracle), because counter addition is the
     * merge operator. This is the production posture: the monitor's
     * state is a bounded sketch that survives any arrival slicing. */
-  def streamDrift(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_drift", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Selection.driftPartial(batch.toDF())
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    graft.operators.Selection.driftReport(
-      graft.operators.Selection.driftMerge(spark.read.parquet(outDir)))
-  }
-
   val qStreamDrift: GraftQuery = GraftQuery(
     "q165_stream_drift",
     graft.operators.Selection.qSketchDrift.oracle.get) { (s, d) =>
     graft.operators.Selection.driftReport(
       graft.operators.Selection.driftMerge(
-        streamMultiIndexes(s, d).driftPartials))
+        served(s, documents, d)("drift").rows))
   }
 
-  /** STREAMING Z-ORDER INGEST: q171's tile maintenance run inside
-    * foreachBatch — the layout lifecycle's live path (build q169 →
+  /** STREAMING Z-ORDER INGEST: q171's tile maintenance run per
+    * trigger — the layout lifecycle's live path (build q169 →
     * batch-maintain q171 → stream-maintain q173, mirroring the ANN
     * index's q139→q140→q147 arc). Each arriving event micro-batch is
     * Morton-coded and merged into the cell-partitioned base via
@@ -1852,18 +1443,12 @@ object Streams {
       .where(pmod(col("event_id"), lit(5L)) =!= 4L)
     ZOrder.writeLayout(corpus, basePath)
     withStreamShufflePartitions(spark) {
-      val stream = (srcDir match {
-        case Some(dir) =>
-          // spec-staged copy (already µs ts, possibly re-chunked for
-          // multi-trigger runs)
-          val fileSchema = spark.read.parquet(dir).schema
-          val reader = spark.readStream.schema(fileSchema)
-          maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-          graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-        case None => readEventsStream(spark, sfDir)
-      }).where(pmod(col("event_id"), lit(5L)) === 4L)
+      val stream = readEventsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
+        .where(pmod(col("event_id"), lit(5L)) === 4L)
       val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        // no partial contract: each trigger merges into the SHARED base
+        // layout, rewriting the tiles it touches — no per-trigger log
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
           ZOrder.incrementalMaintain(spark, basePath,
             ZOrder.eventCells(batch.toDF()))
           ()
@@ -1888,99 +1473,15 @@ object Streams {
     * own max day, so late batches can only ADD to partials, never
     * invalidate applied weights. Drained result is hash-identical to
     * the batch q186 — the oracle is q186's SQL. */
-  def streamDecayedCounts(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_decay", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = srcDir match {
-        case Some(dir) =>
-          val fileSchema = spark.read.parquet(dir).schema
-          val reader = spark.readStream.schema(fileSchema)
-          maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-          graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-        case None => readEventsStream(spark, sfDir)
-      }
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.toDF()
-            .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-            .agg(count(lit(1)).as("n"))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    decayedServe(
-      spark.read.schema("event_type STRING, day DATE, n BIGINT").parquet(outDir))
-  }
-
   val qStreamDecayedCounts: GraftQuery = GraftQuery(
     "q188_stream_decayed_counts",
     graft.operators.Extras.qDecayedCounts.oracle.get) { (s, d) =>
-    decayedServe(streamEventsPartials(s, d)._1)
+    decayedServe(served(s, events, d)("decay").rows)
   }
-
-  /** ONE events-ingest drain maintaining the two event-fed monoid
-    * partial logs together — the daily decay census (q188's) and the
-    * OLS daily census (q265's) — the doc multi-drain discipline on
-    * the events source: one stream setup + one read of the arrivals
-    * instead of one per maintainer. Single-drain twins stay untouched
-    * (spec targets); both serving queries keep their batch oracles. */
-  private val eventsPartialsMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
-      (DataFrame, DataFrame)]("streams.eventsPartials")(p => {
-      org.apache.spark.sql.graftshim.Checkpoints.release(p._1)
-      org.apache.spark.sql.graftshim.Checkpoints.release(p._2)
-    })
-
-  /** (decay partials, OLS daily census partials). */
-  private def streamEventsPartials(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
-    eventsPartialsMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
-      val key = srcDir.getOrElse(sfDir)
-      val decayDir = graft.operators.Formats.scratchDir(
-        "graft_stream_decay_multi", key)
-      val olsDir = graft.operators.Formats.scratchDir(
-        "graft_stream_ols_multi", key)
-      Seq(decayDir, olsDir).foreach(graft.operators.Formats.wipe)
-      withStreamShufflePartitions(spark) {
-        val stream = srcDir match {
-          case Some(dir) =>
-            val fileSchema = spark.read.parquet(dir).schema
-            val reader = spark.readStream.schema(fileSchema)
-            maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-            graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-          case None => readEventsStream(spark, sfDir)
-        }
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val b = batch.toDF().persist()
-            try {
-              b.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-                .agg(count(lit(1)).as("n"))
-                .write.mode("append").parquet(decayDir)
-              graft.operators.TrendStats.dailyCensus(b)
-                .write.mode("append").parquet(olsDir)
-            } finally { b.unpersist(); () }
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      (spark.read.schema("event_type STRING, day DATE, n BIGINT")
-        .parquet(decayDir).localCheckpoint(),
-        spark.read.parquet(olsDir).localCheckpoint())
-    }
 
   /** q188's serve: merge the daily partials and apply the Q30
     * fixed-point decay weighting at read time. */
-  private def decayedServe(partials: DataFrame): DataFrame = {
+  private[graft] def decayedServe(partials: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     partials
       .groupBy("event_type", "day").agg(sum("n").as("n")) // merge partials
@@ -2002,6 +1503,7 @@ object Streams {
 
   /** Arrival-file count and allowed lateness for the late-data audit. */
   private[graft] val lateArrivalFiles = 4
+
   private val lateDelayMicros = 3600L * 1000000L // 1 hour
 
   /** Stage the events table as [[lateArrivalFiles]] ARRIVAL files with
@@ -2045,7 +1547,7 @@ object Streams {
     * watermark delay — per event-hour, how many rows arrived, and how
     * many arrived LATE (older than the watermark in force when their
     * micro-batch ran). The engine itself drops late rows silently;
-    * this audit is the foreachBatch pass that counts them instead.
+    * this audit is the per-trigger pass that counts them instead.
     *
     * Watermark semantics mirrored exactly: Spark computes the
     * watermark from data seen in PRIOR batches (it advances at batch
@@ -2073,7 +1575,9 @@ object Streams {
       val stream = spark.readStream.schema("event_id BIGINT, ts TIMESTAMP")
         .option("maxFilesPerTrigger", 1).parquet(dir)
       val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
+        // no partial contract: a row's lateness depends on the running
+        // max of PRIOR triggers, state no one-batch featurize can see
+        .foreachBatch { (batch: Dataset[Row], bid: Long) =>
           val priorMax = runningMax.get()
           val isLate =
             if (priorMax == Long.MinValue) lit(false)
@@ -2207,14 +1711,7 @@ object Streams {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = "graft_stream_transitions"
-    val stream = (srcDir match {
-      case Some(dir) =>
-        val fileSchema = spark.read.parquet(dir).schema
-        val reader = spark.readStream.schema(fileSchema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-      case None => readEventsStream(spark, sfDir)
-    })
+    val stream = readEventsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
       .as[(Long, Long, Long, String)]
@@ -2294,14 +1791,7 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = "graft_stream_funnel"
     val unset = Long.MinValue
-    val stream = (srcDir match {
-      case Some(dir) =>
-        val fileSchema = spark.read.parquet(dir).schema
-        val reader = spark.readStream.schema(fileSchema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-      case None => readEventsStream(spark, sfDir)
-    })
+    val stream = readEventsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
       .as[(Long, Long, Long, String)]
@@ -2394,14 +1884,7 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = "graft_stream_concurrency"
     val gapUs = 1800000000L
-    val stream = (srcDir match {
-      case Some(dir) =>
-        val fileSchema = spark.read.parquet(dir).schema
-        val reader = spark.readStream.schema(fileSchema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-      case None => readEventsStream(spark, sfDir)
-    })
+    val stream = readEventsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .as[(Long, Long, Long)]
     def update(user: Long, rows: Iterator[(Long, Long, Long)],
@@ -2474,14 +1957,7 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = "graft_stream_session_kpis"
     val gapUs = 1800000000L
-    val stream = (srcDir match {
-      case Some(dir) =>
-        val fileSchema = spark.read.parquet(dir).schema
-        val reader = spark.readStream.schema(fileSchema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-      case None => readEventsStream(spark, sfDir)
-    })
+    val stream = readEventsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .as[(Long, Long, Long)]
     def update(user: Long, rows: Iterator[(Long, Long, Long)],
@@ -2568,14 +2044,7 @@ object Streams {
     val name = "graft_stream_behavior"
     val unset = Long.MinValue
     val gapUs = 1800000000L
-    val stream = (srcDir match {
-      case Some(dir) =>
-        val fileSchema = spark.read.parquet(dir).schema
-        val reader = spark.readStream.schema(fileSchema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-      case None => readEventsStream(spark, sfDir)
-    })
+    val stream = readEventsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
       .as[(Long, Long, Long, String)]
@@ -2645,41 +2114,10 @@ object Streams {
     * 100 TB/day: per trigger the exchange carries the batch's own
     * (type, day) cells; sink growth is O(types × days) per trigger
     * and compacts by the same re-sum (a q239-style fold bounds it). */
-  def streamOlsTrend(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_ols", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = srcDir match {
-        case Some(dir) =>
-          val fileSchema = spark.read.parquet(dir).schema
-          val reader = spark.readStream.schema(fileSchema)
-          maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-          graft.sources.Tables.normalizeEventsTs(reader.parquet(dir))
-        case None => readEventsStream(spark, sfDir)
-      }
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.TrendStats.dailyCensus(batch.toDF())
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val daily = spark.read.parquet(outDir)
-      .groupBy("event_type", "d").agg(sum("n").as("n"))
-    graft.operators.TrendStats.olsFromDaily(daily)
-  }
-
   val qStreamOlsTrend: GraftQuery = GraftQuery(
     "q265_stream_ols_trend",
     graft.operators.TrendStats.qOlsTrend.oracle.get) { (s, d) =>
-    graft.operators.TrendStats.olsFromDaily(
-      streamEventsPartials(s, d)._2
-        .groupBy("event_type", "d").agg(sum("n").as("n")))
+    graft.operators.TrendStats.olsFromDaily(served(s, events, d)("ols").rows)
   }
 
   // ---- q278: streaming PSI drift ----
@@ -2699,34 +2137,22 @@ object Streams {
     * 100 TB/day: per trigger the exchange carries the batch's own
     * distinct (length, side) cells; sink growth is O(distinct
     * lengths) per trigger and compacts by re-aggregation. */
-  def streamPsi(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_psi", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.TrendStats.lengthCensus(batch.toDF())
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    graft.operators.TrendStats.psiFromCensus(spark.read.parquet(outDir))
-  }
-
   val qStreamPsi: GraftQuery = GraftQuery(
     "q278_stream_psi",
     graft.operators.TrendStats.qPsiDrift.oracle.get) { (s, d) =>
     graft.operators.TrendStats.psiFromCensus(
-      streamMultiIndexes(s, d).psiPartials)
+      served(s, documents, d)("psi").rows)
   }
 
   // ---- q282: streaming CDC apply ----
+
+  /** q282's serve: fold the per-batch latest-version partials and
+    * render the applied table. */
+  private[graft] def cdcApplyServe(partials: DataFrame): DataFrame =
+    graft.operators.ModelQueries.cdcFold(partials)
+      .where(col("op") =!= "D")
+      .select(col("k").as("doc_id"), col("final_version"), col("payload"))
+      .orderBy("doc_id")
 
   /** STREAMING CDC APPLY: q281's MERGE semantics over an arriving
     * change stream. arg_max is a MONOID on a totally-ordered version
@@ -2740,39 +2166,10 @@ object Streams {
     * TOUCHED IN THAT BATCH; the sink is the q239 partial log and
     * compacts by this same fold. This is exactly how Delta/Iceberg
     * CDC consumers stay exactly-once without replaying the log. */
-  def streamCdcApply(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_cdc", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.ModelQueries.cdcLatest(
-            graft.operators.ModelQueries.cdcLog(batch.toDF()))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    cdcApplyServe(spark.read.parquet(outDir))
-  }
-
-  /** q282's serve: fold the per-batch latest-version partials and
-    * render the applied table. */
-  private def cdcApplyServe(partials: DataFrame): DataFrame =
-    graft.operators.ModelQueries.cdcFold(partials)
-      .where(col("op") =!= "D")
-      .select(col("k").as("doc_id"), col("final_version"), col("payload"))
-      .orderBy("doc_id")
-
   val qStreamCdcApply: GraftQuery = GraftQuery(
     "q282_stream_cdc",
     graft.operators.ModelQueries.qCdcMerge.oracle.get) { (s, d) =>
-    cdcApplyServe(streamMultiIndexes(s, d).cdcPartials)
+    cdcApplyServe(served(s, documents, d)("cdc").rows)
   }
 
   // ---- q299: streaming RFM maintenance ----
@@ -2789,56 +2186,10 @@ object Streams {
     *
     * 100 TB/day: per trigger the exchange carries one row per
     * customer TOUCHED in the batch; the sink compacts by the fold. */
-  /** The drained per-customer metrics partial log, maintained once per
-    * (session, corpus, staging dir) — the metrics store a segmentation
-    * tier keeps warm; the quintile serve recomputes per call (its
-    * boundaries are data-dependent, never frozen). */
-  private val rfmPartialsMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
-      DataFrame]("streams.rfmPartials")(
-      org.apache.spark.sql.graftshim.Checkpoints.release(_))
-
-  def streamRfm(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val partials = rfmPartialsMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger))(
-      drainRfm(spark, sfDir, srcDir, maxFilesPerTrigger).localCheckpoint())
-    val folded = partials
-      .groupBy("o_custkey")
-      .agg(max("last_d").as("last_d"), sum("f").cast("long").as("f"),
-        sum("m").cast("long").as("m"))
-    graft.operators.Behavior.rfmSegmentsFrom(folded)
-  }
-
-  private def drainRfm(spark: SparkSession, sfDir: String,
-      srcDir: Option[String],
-      maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_rfm", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    val dir = srcDir.getOrElse(
-      stageAsStreamDir("graft_stream_orders", sfDir, "orders.parquet"))
-    withStreamShufflePartitions(spark) {
-      val fileSchema = spark.read.parquet(dir).schema
-      val reader = spark.readStream.schema(fileSchema)
-      maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-      val q = reader.parquet(dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Behavior.rfmMetrics(batch.toDF())
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(outDir)
-  }
-
   val qStreamRfm: GraftQuery = GraftQuery(
     "q299_stream_rfm",
     graft.operators.Behavior.qRfmSegments.oracle.get) { (s, d) =>
-    streamRfm(s, d)
+    graft.operators.Behavior.rfmSegmentsFrom(served(s, orders, d)("rfm").rows)
   }
 
   // ---- q301: streaming zone-map maintenance ----
@@ -2855,90 +2206,11 @@ object Streams {
     * 100 TB/day: per trigger the exchange carries the batch's own
     * bucket cells; the manifest compacts by the same fold and the
     * audit NEVER touches the fact table. */
-  def streamZoneMaps(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_zones", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    val dir = srcDir.getOrElse(
-      stageAsStreamDir("graft_stream_lineitem", sfDir, "lineitem.parquet"))
-    withStreamShufflePartitions(spark) {
-      val fileSchema = spark.read.parquet(dir).schema
-      val reader = spark.readStream.schema(fileSchema)
-      maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-      val q = reader.parquet(dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.ZOrder.zoneMaps(batch.toDF())
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val folded = spark.read.parquet(outDir)
-      .groupBy("layout", "bucket")
-      .agg(min("zmin").as("zmin"), max("zmax").as("zmax"),
-        sum("n").cast("long").as("n"))
-    graft.operators.ZOrder.auditZones(folded)
-  }
-
   val qStreamZoneMaps: GraftQuery = GraftQuery(
     "q301_stream_zonemaps",
     graft.operators.ZOrder.qZoneMapAudit.oracle.get) { (s, d) =>
-    graft.operators.ZOrder.auditZones(
-      streamLineitemPartials(s, d)._2
-        .groupBy("layout", "bucket")
-        .agg(min("zmin").as("zmin"), max("zmax").as("zmax"),
-          sum("n").cast("long").as("n")))
+    graft.operators.ZOrder.auditZones(served(s, lineitem, d)("zones").rows)
   }
-
-  /** ONE lineitem-ingest drain maintaining the two fact-fed monoid
-    * partial logs together — the MV grain partials (q233's) and the
-    * zone-map manifests (q301's): the doc multi-drain discipline on
-    * the lineitem source. Single-drain twins stay untouched. */
-  private val lineitemPartialsMemo =
-    new graft.spark.SessionMemo[(String, Option[String], Option[Int]),
-      (DataFrame, DataFrame)]("streams.lineitemPartials")(p => {
-      org.apache.spark.sql.graftshim.Checkpoints.release(p._1)
-      org.apache.spark.sql.graftshim.Checkpoints.release(p._2)
-    })
-
-  /** (MV partials, zone-map partials). */
-  private def streamLineitemPartials(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
-    lineitemPartialsMemo.getOrElseUpdate(
-      spark, (sfDir, srcDir, maxFilesPerTrigger)) {
-      val key = srcDir.getOrElse(sfDir)
-      val mvDir = graft.operators.Formats.scratchDir(
-        "graft_stream_mv_multi", key)
-      val zoneDir = graft.operators.Formats.scratchDir(
-        "graft_stream_zones_multi", key)
-      Seq(mvDir, zoneDir).foreach(graft.operators.Formats.wipe)
-      val dir = srcDir.getOrElse(
-        stageAsStreamDir("graft_stream_li", sfDir, "lineitem.parquet"))
-      withStreamShufflePartitions(spark) {
-        val fileSchema = spark.read.parquet(dir).schema
-        val reader = spark.readStream.schema(fileSchema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        val q = reader.parquet(dir).writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val b = batch.toDF().persist()
-            try {
-              graft.plans.MvRewrite.mvPartial(b)
-                .write.mode("append").parquet(mvDir)
-              graft.operators.ZOrder.zoneMaps(b)
-                .write.mode("append").parquet(zoneDir)
-            } finally { b.unpersist(); () }
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      (spark.read.parquet(mvDir).localCheckpoint(),
-        spark.read.parquet(zoneDir).localCheckpoint())
-    }
 
   // ---- q298: streaming PCA maintenance ----
 
@@ -2958,74 +2230,15 @@ object Streams {
     * 100 TB/day: per trigger the exchange carries one 2,080-cell
     * partial; sink growth is O(d²) per trigger and compacts by the
     * same fold. */
-  def streamPca(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_pca", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    val dir = srcDir.getOrElse(
-      stageAsStreamDir("graft_stream_emb", sfDir, "embeddings.parquet"))
-    withStreamShufflePartitions(spark) {
-      val reader = spark.readStream
-        .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
-      maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-      val q = reader.parquet(dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Pca.gramPartial(batch.toDF())
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    graft.operators.Pca.pcaReport(
-      graft.operators.Pca.pcaFromPartials(spark, spark.read.parquet(outDir)))
-  }
-
   val qStreamPca: GraftQuery = GraftQuery(
     "q298_stream_pca",
     graft.operators.Pca.qPcaTop.oracle.get) { (s, d) =>
     graft.operators.Pca.pcaReport(
       graft.operators.Pca.pcaFromPartials(s,
-        streamEmbPartials(s, d).gramPartials))
+        served(s, embeddings, d)("pca_gram").rows))
   }
 
   // ---- q288: streaming Merkle maintenance ----
-
-  /** STREAMING MERKLE MAINTENANCE: q266's additive bucket
-    * fingerprints kept current as documents arrive. The per-bucket
-    * (count, Σleaf-hash) summary is a MONOID, so each micro-batch
-    * appends its own partial fingerprint slice and the serve re-sums
-    * — the audit side never replays the corpus. The drained diff
-    * against the same deterministic v2 re-crawl is hash-identical to
-    * batch q266 (same oracle), under any arrival slicing.
-    *
-    * 100 TB/day: per trigger the exchange carries ≤ 256 partial
-    * cells; the sink compacts by the same re-sum. This is how a
-    * replication auditor keeps table fingerprints warm without
-    * rescanning — the q239 partial-log posture on the q266 algebra. */
-  def streamMerkle(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_merkle", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.ModelQueries.merkleLeaf(
-            batch.toDF().select(col("doc_id"), md5(col("text")).as("fp")),
-            "n_a", "f_a")
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    merkleServe(spark, sfDir, spark.read.parquet(outDir))
-  }
 
   /** q288's serve: fold the maintained bucket-fingerprint partials and
     * diff against the deterministic v2 re-crawl (recomputed per call —
@@ -3052,13 +2265,36 @@ object Streams {
       .orderBy("bucket")
   }
 
+  /** STREAMING MERKLE MAINTENANCE: q266's additive bucket
+    * fingerprints kept current as documents arrive. The per-bucket
+    * (count, Σleaf-hash) summary is a MONOID, so each micro-batch
+    * appends its own partial fingerprint slice and the serve re-sums
+    * — the audit side never replays the corpus. The drained diff
+    * against the same deterministic v2 re-crawl is hash-identical to
+    * batch q266 (same oracle), under any arrival slicing.
+    *
+    * 100 TB/day: per trigger the exchange carries ≤ 256 partial
+    * cells; the sink compacts by the same re-sum. This is how a
+    * replication auditor keeps table fingerprints warm without
+    * rescanning — the q239 partial-log posture on the q266 algebra. */
   val qStreamMerkle: GraftQuery = GraftQuery(
     "q288_stream_merkle",
     graft.operators.ModelQueries.qMerkleDiff.oracle.get) { (s, d) =>
-    merkleServe(s, d, streamMultiIndexes(s, d).merklePartials)
+    merkleServe(s, d, served(s, documents, d)("merkle").rows)
   }
 
   // ---- q312: streaming CDC chunk-census maintenance ----
+
+  /** q312's serve: fold the per-batch chunk census partials. */
+  private[graft] def chunkCensusServe(partials: DataFrame): DataFrame =
+    partials
+      .groupBy("chunk_md5")
+      .agg(sum("n_occurrences").cast("long").as("n_occurrences"),
+        sum("n_docs").cast("long").as("n_docs"),
+        min("min_doc").as("min_doc"),
+        max("chunk_len").cast("int").as("chunk_len"))
+      .where(col("n_occurrences") > 1)
+      .orderBy("chunk_md5")
 
   /** STREAMING CDC CENSUS: q308's chunk-hash dedup census maintained
     * as documents arrive. Each micro-batch CDC-chunks ONLY its own
@@ -3070,46 +2306,10 @@ object Streams {
     * re-chunked: per trigger the exchange carries 16-byte chunk keys
     * of the batch only — the q288 partial-log posture on the q308
     * algebra (boilerplate detection that stays warm at ingest). */
-  def streamCdcCensus(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_cdc_census", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = readDocsStream(spark, sfDir, srcDir, maxFilesPerTrigger)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.CdcChunking.cdcChunks(batch.toDF())
-            .groupBy("chunk_md5")
-            .agg(count(lit(1)).as("n_occurrences"),
-              countDistinct(col("doc_id")).as("n_docs"),
-              min(col("doc_id")).as("min_doc"),
-              max(col("chunk_len")).as("chunk_len"))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    chunkCensusServe(spark.read.parquet(outDir))
-  }
-
-  /** q312's serve: fold the per-batch chunk census partials. */
-  private def chunkCensusServe(partials: DataFrame): DataFrame =
-    partials
-      .groupBy("chunk_md5")
-      .agg(sum("n_occurrences").cast("long").as("n_occurrences"),
-        sum("n_docs").cast("long").as("n_docs"),
-        min("min_doc").as("min_doc"),
-        max("chunk_len").cast("int").as("chunk_len"))
-      .where(col("n_occurrences") > 1)
-      .orderBy("chunk_md5")
-
   val qStreamCdcCensus: GraftQuery = GraftQuery(
     "q312_stream_cdc_census",
     graft.operators.CdcChunking.qCdcDedup.oracle.get) { (s, d) =>
-    chunkCensusServe(streamMultiIndexes(s, d).chunkPartials)
+    chunkCensusServe(served(s, documents, d)("cdc_census").rows)
   }
 
   // ---- q229: streaming KMV sketch merge ----
@@ -3128,41 +2328,12 @@ object Streams {
     * 100 TB/day: per batch the exchange carries ≤ K rows per source
     * per partition; sink growth is ≤ K·sources per trigger and
     * compacts at read time (or via a q146-style fold). */
-  def streamKmvSketch(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_kmv", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = srcDir match {
-        case Some(dir) =>
-          val reader = spark.readStream.schema(
-            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-          maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-          reader.parquet(dir)
-        case None => readDocsStream(spark, sfDir)
-      }
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.KmvSketch.partialSketch(batch.toDF())
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val partials = spark.read.schema("source STRING, h BIGINT").parquet(outDir)
-    graft.operators.KmvSketch.summarize(
-      graft.operators.KmvSketch.foldSketches(partials))
-  }
-
   val qStreamKmv: GraftQuery = GraftQuery(
     "q229_stream_kmv_sketch",
     graft.operators.KmvSketch.summarySql) { (s, d) =>
     graft.operators.KmvSketch.summarize(
       graft.operators.KmvSketch.foldSketches(
-        streamMultiIndexes(s, d).kmvPartials))
+        served(s, documents, d)("kmv").rows))
   }
 
   // ---- q233: streaming MV maintenance ----
@@ -3171,7 +2342,7 @@ object Streams {
     * continuous pipeline: each arriving micro-batch of fact rows is
     * folded to DISTRIBUTIVE partials at the MV grain (count, exact
     * DECIMAL sums, min/max — the [[graft.plans.MvRewrite]] partial
-    * set) inside `foreachBatch` and APPENDED to the summary store;
+    * set) per trigger and APPENDED to the summary store;
     * the serving read merges partials with one bounded re-aggregate
     * (count=Σn, sum=Σs — decimal addition is associative, so any
     * micro-batch slicing reconstructs the exact batch answer;
@@ -3188,42 +2359,10 @@ object Streams {
     * production deployment compacts the partial log periodically with
     * the same merge expression (q146-style fold) instead of at read
     * time. */
-  def streamMvMaintain(spark: SparkSession, sfDir: String,
-      srcDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = graft.operators.Formats.scratchDir(
-      "graft_stream_mv", srcDir.getOrElse(sfDir))
-    graft.operators.Formats.wipe(outDir)
-    withStreamShufflePartitions(spark) {
-      val stream = srcDir match {
-        case Some(dir) =>
-          val fileSchema = spark.read.parquet(dir).schema
-          val reader = spark.readStream.schema(fileSchema)
-          maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-          reader.parquet(dir)
-        case None =>
-          val streamDir = stageAsStreamDir("graft_stream_li", sfDir, "lineitem.parquet")
-          val fileSchema = spark.read.parquet(streamDir).schema
-          spark.readStream.schema(fileSchema).parquet(streamDir)
-      }
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.plans.MvRewrite.mvPartial(batch.toDF())
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    graft.plans.MvRewrite.mvServe(spark.read.parquet(outDir))
-  }
-
-  /** Oracle = full-corpus MV recompute (q226's oracle verbatim): the
-    * hash match proves streamed maintenance ≡ recompute. */
   val qStreamMvMaintain: GraftQuery = GraftQuery(
     "q233_stream_mv_maintain",
     graft.plans.MvRewrite.qMvIncrement.oracle.get) { (s, d) =>
-    graft.plans.MvRewrite.mvServe(streamLineitemPartials(s, d)._1)
+    graft.plans.MvRewrite.mvServe(served(s, lineitem, d)("mv").rows)
   }
 
   // ---- q242: stream-stream LEFT OUTER join ----

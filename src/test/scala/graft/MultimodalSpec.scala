@@ -76,8 +76,10 @@ class MultimodalSpec extends SparkSpecBase {
       .count(f => f.getName.endsWith(".parquet"))
     assert(nFiles >= 3, s"fixture must span ≥3 files, got $nFiles")
     Multimodal.PngDecoder.inits.set(0L)
-    val out = graft.streaming.Streams.streamImageFeatures(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val docs = graft.streaming.Streams.documents
+    val out = graft.streaming.Streams.drain(spark, docs,
+      docs.all(spark, sf001).filter(_.name == "image_features"), sf001,
+      Some(src), Some(1))("image_features").rows
     assert(out.count() === graft.sources.Tables.documents(spark, sf001).count())
     val inits = Multimodal.PngDecoder.inits.get()
     // each micro-batch runs 1 task (one input file); tasks execute

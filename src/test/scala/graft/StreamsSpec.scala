@@ -6,6 +6,15 @@ import org.apache.spark.sql.functions._
 
 class StreamsSpec extends SparkSpecBase {
 
+  /** One maintainer of `source`, drained ALONE — `drain(Seq(m))` —
+    * over `srcDir` one file per trigger (default staging when None). */
+  private def drainOne(source: Streams.Source, name: String,
+      srcDir: Option[String] = None): Streams.Served = {
+    val m = source.all(spark, sf001).find(_.name == name).get
+    Streams.drain(spark, source, Seq(m), sf001, srcDir,
+      srcDir.map(_ => 1))(name)
+  }
+
   test("watermark drops late data: a row older than the watermark cannot reopen an emitted window") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
@@ -267,8 +276,7 @@ class StreamsSpec extends SparkSpecBase {
     graft.sources.Tables.documents(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
     graft.operators.CurationFunnel.corpusStatsBuilds.set(0)
-    val out = graft.streaming.Streams.streamIncrementalCuration(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1)).cache()
+    val out = drainOne(Streams.documents, "curate", Some(src)).rows.cache()
     val nBatches = out.select("batch_id").distinct().count()
     assert(nBatches >= 2, s"fixture must span >=2 micro-batches, got $nBatches")
     // the persisted corpus statistics were built ONCE for the whole
@@ -298,7 +306,7 @@ class StreamsSpec extends SparkSpecBase {
 
     // single-trigger staging: decisions are byte-identical to q130's
     // batch output (q145's oracle contract)
-    val single = graft.streaming.Streams.streamIncrementalCuration(spark, sf001)
+    val single = drainOne(Streams.documents, "curate").rows
       .select("doc_id", "lang", "n_tok", "keep_exact", "keep_span", "keep_fluency")
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     val q130 = SparkEntry.queries("q130_incremental_funnel")(spark, sf001)
@@ -336,8 +344,8 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_planned").toString
     graft.sources.Tables.embeddings(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamPlannedServe(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.streamServe(
+      spark, sf001, Some(src), Some(1), planned = true)
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q328_planned_batch_serve")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -400,8 +408,7 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_imgcensus").toString
     graft.sources.Tables.documents(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamImageCensus(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = drainOne(Streams.documents, "image_census", Some(src)).stated
     val streamedRows = streamed.rows.orderBy("ahash_hi", "ahash_lo")
       .collect().map(_.toSeq).toSeq
     val batchImages = {
@@ -435,8 +442,8 @@ class StreamsSpec extends SparkSpecBase {
     val corpusDocs = graft.sources.Tables.documents(spark, sf001)
       .where(pmod(col("doc_id"), lit(5)) =!= 4)
     // audio
-    val audioStreamed = graft.streaming.Streams.streamAudioCensus(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val audioStreamed =
+      drainOne(Streams.documents, "audio_census", Some(src)).stated
     val audioBatch = graft.operators.Multimodal
       .audioFingerprintsFromDocs(corpusDocs)
       .groupBy("fingerprint").agg(count(lit(1)).as("n_docs"))
@@ -449,8 +456,8 @@ class StreamsSpec extends SparkSpecBase {
         .collect().map(_.toSeq).toSeq)
     // wide video
     val cols = graft.operators.Multimodal.videoWideCensusCols
-    val videoStreamed = graft.streaming.Streams.streamVideoWideCensus(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val videoStreamed =
+      drainOne(Streams.documents, "videow_census", Some(src)).stated
     val videoBatch = graft.operators.Multimodal.videoWideFromDocs(corpusDocs)
       .groupBy(cols.map(col): _*).agg(count(lit(1)).as("n_docs"))
     assert(videoStreamed.rows.orderBy(cols.map(col): _*).collect().map(_.toSeq).toSeq ===
@@ -513,8 +520,8 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_cms").toString
     graft.sources.Tables.documents(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamCountMin(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.cmsServe(spark, sf001,
+      drainOne(Streams.documents, "cms", Some(src)).rows)
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q151_countmin_tokens")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -525,8 +532,9 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_drift").toString
     graft.sources.Tables.documents(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamDrift(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = graft.operators.Selection.driftReport(
+      graft.operators.Selection.driftMerge(
+        drainOne(Streams.documents, "drift", Some(src)).rows))
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q160_sketch_drift")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -554,8 +562,8 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_decay").toString
     graft.sources.Tables.events(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamDecayedCounts(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.decayedServe(
+      drainOne(Streams.events, "decay", Some(src)).rows)
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q186_decayed_counts")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -569,8 +577,8 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_mv").toString
     graft.sources.Tables.lineitem(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamMvMaintain(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = graft.plans.MvRewrite.mvServe(
+      drainOne(Streams.lineitem, "mv", Some(src)).rows)
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("q226_mv_increment")(spark, sf001)
       .collect().map(_.toSeq).toSeq
@@ -772,8 +780,8 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_ols").toString
     Tables.events(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamOlsTrend(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = graft.operators.TrendStats.olsFromDaily(
+        drainOne(Streams.events, "ols", Some(src)).rows)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q257_ols_trend")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -811,8 +819,8 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_zones").toString
     Tables.lineitem(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamZoneMaps(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = graft.operators.ZOrder.auditZones(
+        drainOne(Streams.lineitem, "zones", Some(src)).rows)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q267_zonemap_audit")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -823,8 +831,8 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_rfm").toString
     Tables.orders(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamRfm(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = graft.operators.Behavior.rfmSegmentsFrom(
+        drainOne(Streams.orders, "rfm", Some(src)).rows)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q290_rfm_segments")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -837,8 +845,9 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_pca").toString
     Tables.embeddings(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamPca(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = graft.operators.Pca.pcaReport(
+        graft.operators.Pca.pcaFromPartials(spark,
+          drainOne(Streams.embeddings, "pca_gram", Some(src)).rows))
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q275_pca_top_component")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -852,8 +861,8 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_cdc").toString
     Tables.documents(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamCdcApply(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = Streams.cdcApplyServe(
+        drainOne(Streams.documents, "cdc", Some(src)).rows)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q281_cdc_merge")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -867,8 +876,8 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_psi").toString
     Tables.documents(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = Streams.streamPsi(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = graft.operators.TrendStats.psiFromCensus(
+        drainOne(Streams.documents, "psi", Some(src)).rows)
       .collect().map(_.toString).toSeq
     val batch = SparkEntry.queries("q269_psi_drift")(spark, sf001)
       .collect().map(_.toString).toSeq
@@ -944,8 +953,9 @@ class StreamsSpec extends SparkSpecBase {
       docs.where(pmod(col("doc_id"), lit(3)) === i)
         .coalesce(1).write.mode("append").parquet(src)
     }
-    val streamed = Streams.streamKmvSketch(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = graft.operators.KmvSketch.summarize(
+        graft.operators.KmvSketch.foldSketches(
+          drainOne(Streams.documents, "kmv", Some(src)).rows))
       .collect().map(_.toString).toSeq
     val batch = graft.operators.KmvSketch.summarize(
         graft.operators.KmvSketch.sketches(spark, sf001))
@@ -963,8 +973,7 @@ class StreamsSpec extends SparkSpecBase {
     val src = java.nio.file.Files.createTempDirectory("graft_mb_minhash").toString
     Tables.documents(spark, sf001).repartition(3)
       .write.mode("overwrite").parquet(src)
-    val streamed = graft.streaming.Streams.streamMinhashBandIndex(
-      spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
+    val streamed = drainOne(Streams.documents, "minhash_bands", Some(src)).bands
     val streamedRows = streamed.rows.orderBy("doc_id", "band_id")
       .collect().map(_.toSeq).toSeq
     val batch = graft.operators.Dedup
@@ -992,80 +1001,85 @@ class StreamsSpec extends SparkSpecBase {
       "probe against the maintained band index must equal the batch probe")
   }
 
+  // every source's drain(all) opens ONE stream, and each of its
+  // maintainers equals that maintainer drained alone, drain(Seq(m))
   test("q366: one multi-index drain pass equals the single-drain twins, with one stream") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.StreamingQueryListener
-    // fresh staging dir → the memo must genuinely drain here, under
-    // the listener's watch
-    val src = java.nio.file.Files.createTempDirectory("graft_mb_multi").toString
-    Tables.documents(spark, sf001).repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = {
-        started.incrementAndGet(); ()
+    def staged(source: Streams.Source): org.apache.spark.sql.DataFrame =
+      source.name match {
+        case "documents" => Tables.documents(spark, sf001)
+        case "embeddings" => Tables.embeddings(spark, sf001)
+        case "events" => Tables.events(spark, sf001)
+        case "lineitem" => Tables.lineitem(spark, sf001)
+        case "orders" => Tables.orders(spark, sf001)
       }
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    for (source <- Streams.sources) {
+      // fresh 3-file staging dir → every drain genuinely runs here,
+      // under the listener's watch, over several triggers
+      val src = java.nio.file.Files.createTempDirectory(
+        s"graft_mb_multi_${source.name}").toString
+      staged(source).repartition(3).write.mode("overwrite").parquet(src)
+      val started = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new StreamingQueryListener {
+        override def onQueryStarted(
+            e: StreamingQueryListener.QueryStartedEvent): Unit = {
+          started.incrementAndGet(); ()
+        }
+        override def onQueryProgress(
+            e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+        override def onQueryTerminated(
+            e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      }
+      spark.streams.addListener(l)
+      val all =
+        try Streams.drain(spark, source, source.all(spark, sf001), sf001,
+          Some(src), Some(1))
+        finally {
+          // the streaming-listener bus is async: give the started event
+          // a bounded window to land before detaching
+          val deadline = System.nanoTime() + 5000000000L
+          while (started.get() < 1 && System.nanoTime() < deadline)
+            Thread.sleep(50)
+          spark.streams.removeListener(l)
+        }
+      assert(started.get() === 1, s"${source.name} drain(all) must open " +
+        s"exactly ONE stream, opened ${started.get()}")
+      // each maintained artifact equals the same maintainer drained alone
+      for (m <- source.all(spark, sf001)) {
+        val one = drainOne(source, m.name, Some(src))
+        val many = all(m.name)
+        val what = s"${source.name}/${m.name}"
+        assert(rowsOf(many.rows).nonEmpty, s"$what maintained nothing")
+        assert(rowsOf(many.rows) === rowsOf(one.rows),
+          s"$what: drain(all) rows diverge from drain(Seq(m))")
+        assert(many.counts.map(rowsOf) === one.counts.map(rowsOf),
+          s"$what: drain(all) counts diverge from drain(Seq(m))")
+        assert(many.stats === one.stats,
+          s"$what: drain(all) guard stats diverge from drain(Seq(m))")
+      }
     }
-    spark.streams.addListener(l)
-    val multi =
-      try graft.streaming.Streams.streamMultiIndexes(
-        spark, sf001, srcDir = Some(src), maxFilesPerTrigger = Some(1))
-      finally {
-        // the streaming-listener bus is async: give the started event
-        // a bounded window to land before detaching
-        val deadline = System.nanoTime() + 5000000000L
-        while (started.get() < 1 && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        spark.streams.removeListener(l)
-      }
-    assert(started.get() === 1,
-      s"multi-index drain must open exactly ONE stream, opened ${started.get()}")
-    def rowsOf(df: org.apache.spark.sql.DataFrame, cols: String*) =
-      df.orderBy(cols.map(col): _*).collect().map(_.toSeq).toSeq
-    // each maintained index equals its single-drain twin
-    val simSingle = graft.streaming.Streams.streamSimhashCensus(spark, sf001)
-    assert(rowsOf(multi.simhash.rows, "simhash") ===
-      rowsOf(simSingle.rows, "simhash"))
-    val imgSingle = graft.streaming.Streams.streamImageCensus(spark, sf001)
-    assert(rowsOf(multi.image.rows, "ahash_hi", "ahash_lo") ===
-      rowsOf(imgSingle.rows, "ahash_hi", "ahash_lo"))
-    val audSingle = graft.streaming.Streams.streamAudioCensus(spark, sf001)
-    assert(rowsOf(multi.audio.rows, "fingerprint") ===
-      rowsOf(audSingle.rows, "fingerprint"))
-    val vidSingle = graft.streaming.Streams.streamVideoWideCensus(spark, sf001)
-    val vidCols = graft.operators.Multimodal.videoWideCensusCols
-    assert(rowsOf(multi.videoWide.rows, vidCols: _*) ===
-      rowsOf(vidSingle.rows, vidCols: _*))
-    val bandsSingle = graft.streaming.Streams
-      .streamMinhashBandIndex(spark, sf001)
-    assert(rowsOf(multi.bands.rows, "doc_id", "band_id") ===
-      rowsOf(bandsSingle.rows, "doc_id", "band_id"))
-    assert(rowsOf(multi.bands.bucketCounts, "band_id", "band_hash") ===
-      rowsOf(bandsSingle.bucketCounts, "band_id", "band_hash"))
-    // the widened family: every partial-log serve from the one-pass
-    // drain equals its single-drain twin (folds over the memoized
-    // relations vs the twins' own fresh drains)
+    // the catalog serves (default staging, memoized drain(all)) equal
+    // the same serve over each maintainer drained alone
     def served(q: String) =
       SparkEntry.queries(q)(spark, sf001).collect().map(_.toSeq).toSeq
     assert(served("q153_stream_countmin") ===
-      graft.streaming.Streams.streamCountMin(spark, sf001)
+      Streams.cmsServe(spark, sf001, drainOne(Streams.documents, "cms").rows)
         .collect().map(_.toSeq).toSeq)
     assert(served("q229_stream_kmv_sketch") ===
-      graft.streaming.Streams.streamKmvSketch(spark, sf001)
+      graft.operators.KmvSketch.summarize(
+        graft.operators.KmvSketch.foldSketches(
+          drainOne(Streams.documents, "kmv").rows))
         .collect().map(_.toSeq).toSeq)
     assert(served("q282_stream_cdc") ===
-      graft.streaming.Streams.streamCdcApply(spark, sf001)
+      Streams.cdcApplyServe(drainOne(Streams.documents, "cdc").rows)
         .collect().map(_.toSeq).toSeq)
     assert(served("q312_stream_cdc_census") ===
-      graft.streaming.Streams.streamCdcCensus(spark, sf001)
+      Streams.chunkCensusServe(drainOne(Streams.documents, "cdc_census").rows)
         .collect().map(_.toSeq).toSeq)
     assert(served("q145_stream_incremental_funnel") ===
-      graft.streaming.Streams.streamIncrementalCuration(spark, sf001)
+      drainOne(Streams.documents, "curate").rows
         .select("doc_id", "lang", "n_tok",
           "keep_exact", "keep_span", "keep_fluency")
         .orderBy("doc_id").collect().map(_.toSeq).toSeq)
@@ -1106,14 +1120,15 @@ class StreamsSpec extends SparkSpecBase {
   /** At EVERY trigger boundary — not just after the full drain — the
     * partially-maintained census must be a serveable probe target:
     * probing it equals the batch probe over exactly the documents that
-    * have arrived so far. Drives [[Streams.drainValueCensus]]'s
-    * onPrefix hook; the reference census is built from scratch over
-    * the prefix doc ids through the SAME tier featurize. */
+    * have arrived so far. Drives [[Streams.drain]]'s onPrefix hook; the
+    * reference census is built from scratch over the prefix doc ids
+    * through the SAME census featurize. */
   private def assertPrefixProbeConsistency(
-      tier: Streams.CensusTier, nFiles: Int,
+      m: Streams.Maintainer, nFiles: Int,
       probe: (org.apache.spark.sql.SparkSession, String,
         graft.operators.BandedHamming.StatedIndex) =>
         org.apache.spark.sql.DataFrame): Unit = {
+    val scheme = m.scheme.get
     val src = java.nio.file.Files.createTempDirectory(
       s"graft_prefix_${nFiles}_").toString
     Tables.documents(spark, sf001).repartition(nFiles)
@@ -1121,20 +1136,19 @@ class StreamsSpec extends SparkSpecBase {
     val results = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Seq[Seq[Any]], Seq[Seq[Any]])]
     var prefixIds = Seq.empty[Long]
-    Streams.drainValueCensus(spark, tier, sf001, Some(src), Some(1),
-      Streams.fixtureCorpusFilter,
-      Some { (ids: Seq[Long], prefixCensus: org.apache.spark.sql.DataFrame) =>
+    Streams.drain(spark, Streams.documents, Seq(m), sf001, Some(src), Some(1),
+      Some { (_: String, arrived: org.apache.spark.sql.DataFrame,
+          prefixCensus: org.apache.spark.sql.DataFrame) =>
+        val ids = arrived.select("doc_id").collect().map(_.getLong(0)).toSeq
         prefixIds = prefixIds ++ ids
         // the mid-stream serve: probe the partially-maintained census
-        val maintained = tier.scheme.indexed(prefixCensus.localCheckpoint())
+        val maintained = scheme.indexed(prefixCensus.localCheckpoint())
         val got = probe(spark, sf001, maintained)
           .collect().map(_.toSeq).toSeq
         // the batch reference over exactly the arrived documents
-        val reference = tier.scheme.indexed(
-          tier.featurize(Tables.documents(spark, sf001)
-            .where(col("doc_id").isin(prefixIds: _*)))
-            .groupBy(tier.groupCols.map(col): _*)
-            .agg(count(lit(1)).as("n_docs"))
+        val reference = scheme.indexed(
+          m.fold(m.featurize(Tables.documents(spark, sf001)
+            .where(col("doc_id").isin(prefixIds: _*))))
             .localCheckpoint())
         val want = probe(spark, sf001, reference)
           .collect().map(_.toSeq).toSeq
@@ -1153,16 +1167,16 @@ class StreamsSpec extends SparkSpecBase {
 
   test("q351 prefix-serveability: the partially-maintained simhash census serves the probe at every trigger (3 slicings)") {
     for (nFiles <- Seq(2, 3, 5))
-      assertPrefixProbeConsistency(Streams.simhashCensusTier, nFiles,
+      assertPrefixProbeConsistency(Streams.simhashCensus, nFiles,
         graft.operators.Dedup.simhashBatchProbe)
   }
 
   test("q356/q359/q361 prefix-serveability: image, audio, and wide-video probes serve every prefix of their maintained censuses") {
-    assertPrefixProbeConsistency(Streams.imageCensusTier, 3,
+    assertPrefixProbeConsistency(Streams.imageCensus, 3,
       graft.operators.Multimodal.imageBatchProbe)
-    assertPrefixProbeConsistency(Streams.audioCensusTier, 3,
+    assertPrefixProbeConsistency(Streams.audioCensus, 3,
       graft.operators.Multimodal.audioBatchProbe)
-    assertPrefixProbeConsistency(Streams.videoWideCensusTier, 2,
+    assertPrefixProbeConsistency(Streams.videoWideCensus, 2,
       graft.operators.Multimodal.videoWideBatchProbe)
   }
 }
